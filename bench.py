@@ -54,7 +54,23 @@ BENCH_QUERIES = [
 ]
 
 
+def _cpus_from_env() -> int | None:
+    """``SPARK_GRAFT_CPUS`` as a positive int (None when unset); a bad
+    value stops the bench before any work instead of after the run."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if not raw:
+        return None
+    try:
+        cpus = int(raw)
+    except ValueError:
+        cpus = 0
+    if cpus < 1:
+        raise SystemExit(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return cpus
+
+
 def main() -> None:
+    cpus = _cpus_from_env()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
     spark = get_spark("bench")
@@ -1052,9 +1068,8 @@ def main() -> None:
     # `_scale10x_*` keys) are where parallelism is measurable.  The
     # `_cdc_events_per_sec*` keys are THROUGHPUT (higher = better),
     # declared in `throughput_keys` so a ratio consumer can orient them.
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
     scaling_ctx = {
-        "cpus": int(cpus_env) if cpus_env else None,
+        "cpus": cpus,
         "parallelism": spark.sparkContext.defaultParallelism,
         "throughput_keys": [
             "_cdc_events_per_sec", "_cdc_events_per_sec_10x", "_cdc_events_per_sec_wire",

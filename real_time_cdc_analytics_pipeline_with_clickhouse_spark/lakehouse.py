@@ -23,7 +23,8 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-MONTH_COL = "event_month"  # clickhouse-init.sql:27 PARTITION BY toYYYYMM
+from .storage import finish_interrupted_swaps
+from .warehouse import MONTH_COL
 
 
 def delta_available(spark: SparkSession) -> bool:
@@ -61,8 +62,8 @@ def merge_upsert_delta(batch: DataFrame, target_dir: str, key: str, version: str
     - the batch is pre-compacted per key so MERGE sees a unique source
       (multiple updates per key in one batch would otherwise be a
       MERGE cardinality violation);
-    - commit is transactional through the Delta log: no staging dir,
-      no dynamic-overwrite window.
+    - commit is transactional through the Delta log: no staged months,
+      no rename window.
     """
     from delta.tables import DeltaTable
 
@@ -118,6 +119,10 @@ def merge_upsert(batch: DataFrame, target_dir: str, key: str, version: str) -> N
     (migrate explicitly with ``CONVERT TO DELTA`` semantics instead)."""
     from .streaming.pipeline import merge_upsert_parquet
 
+    if not is_delta_table(target_dir):
+        # a parquet table caught between a month's two renames may list
+        # no month at all: finish the swap before routing on its shape
+        finish_interrupted_swaps(target_dir)
     if is_delta_table(target_dir):
         merge_upsert_delta(batch, target_dir, key, version)
     elif _is_parquet_emulation_table(target_dir):

@@ -811,10 +811,12 @@ def merge_corpus_card_increment(
     stage-swap commit; re-delivered epochs no-op)."""
     import os
 
+    from ..storage import finish_interrupted_swaps
     from ..warehouse import _stage_swap
     from .sketches import _epoch_done, _epoch_stamp
 
     state = corpus_card_state(documents, lgk)
+    finish_interrupted_swaps(path)
     if not os.path.isdir(path):
         # stage-swap the bootstrap too: a crash mid-bootstrap must not
         # leave a partial directory the next call merges on top of

@@ -672,8 +672,7 @@ def _iteration_shuffle(spark, n_rows: int, rows_per_partition: int = 2_000_000):
     (~2M longs ≈ 32 MB per task), capped at the session setting so a
     cluster-sized config is never exceeded.  Conf changes are
     session-global — concurrent queries on OTHER threads of the same
-    session would momentarily see the reduced value (the same trade
-    ``warehouse._stage_swap`` makes with partitionOverwriteMode)."""
+    session would momentarily see the reduced value."""
     import contextlib
     import math
 

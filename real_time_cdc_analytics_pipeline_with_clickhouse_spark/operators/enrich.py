@@ -25,9 +25,11 @@ def compact_dim_latest(changes: DataFrame) -> DataFrame:
     delete beats its predecessor, matching arrival-order overwrite in
     the reference's map state.
 
-    ``max_by`` on (source_ts_ms, is_delete): combinable hash
-    aggregate — version history collapses map-side before the shuffle
-    (a long CDC backlog compacts in one pass), no per-key sort.
+    ``max_by`` on (source_ts_ms, is_delete): a partial-then-final
+    aggregate, so version history collapses map-side before the
+    shuffle (a long CDC backlog compacts in one pass).  With struct
+    buffers it plans as a ``SortAggregate`` — a per-key ``Sort`` on
+    both sides of the exchange, not a hash aggregate.
     """
     others = [c for c in changes.columns if c != "id"]
     latest = (

@@ -2,7 +2,8 @@
 complement to the artifact families' crash-window designs.
 
 Every stored index in this engine (MinHash dedup, inverted text, IVF
-ANN, perceptual phash, the passage table, the n-gram LM) commits
+ANN, perceptual phash, the passage table, the n-gram LM) and the
+month-partitioned warehouse table commits
 through some mix of staged whole-tree swaps, batch-dir overwrites,
 atomic manifest flips and tombstone tables.  Each crash window is
 individually consistent BY DESIGN (the readers tolerate or repair it),
@@ -465,6 +466,57 @@ def _fsck_ingest_corpus(spark: SparkSession, d: str) -> list:
 
 
 # ------------------------------------------------------------------ #
+# warehouse table (event_month dirs + rename-committed rewrites)       #
+# ------------------------------------------------------------------ #
+
+
+def _fsck_warehouse(spark: SparkSession, d: str) -> list:
+    """The month-partitioned warehouse table written by
+    ``merge_upsert_parquet`` / ``compact_warehouse`` / ``apply_ttl``:
+    every rewrite leftover ``storage.pending_swaps`` finds — the same
+    detection the writers run before they read the table."""
+    from .. import storage
+
+    out: list = []
+    for p in storage.pending_swaps(d):
+        for live, staged in p.missing:
+            out.append(_f(
+                "error", "interrupted_month_swap", live,
+                f"{os.path.basename(live)} is absent: a rewrite stopped "
+                "between the month's two renames; readers see the table "
+                f"without it, and its staged copy waits at {staged}",
+                f"rename {staged} to {live}, then delete the parked copy "
+                "(or run any write to the table: it finishes the swap "
+                "before reading; do NOT rebuild)",
+            ))
+        for parked in p.parked:
+            out.append(_f(
+                "warn", "leftover_parked_copy", parked,
+                "a parked pre-rewrite copy survives next to its live "
+                "replacement — the live one is authoritative",
+                "delete it (the next write to the table does)",
+            ))
+        if p.stage is not None and not p.missing:
+            out.append(_f(
+                "warn", "leftover_staged_copy", p.stage,
+                (
+                    "a committed rewrite's stage is still on disk: the "
+                    "months left in it are not swapped in yet, so the "
+                    "table mixes old and new months"
+                    if p.complete else
+                    "an uncommitted rewrite (no _SUCCESS); the live table "
+                    "is intact and authoritative"
+                ),
+                (
+                    "run any write to the table (it rolls the swap forward)"
+                    if p.complete else
+                    "delete it (the next write to the table does)"
+                ),
+            ))
+    return out
+
+
+# ------------------------------------------------------------------ #
 # entry points                                                         #
 # ------------------------------------------------------------------ #
 
@@ -491,7 +543,24 @@ def detect_family(artifact_dir: str) -> str | None:
         or os.path.isdir(artifact_dir + "_meta")
     ):
         return "ingest_corpus"
+    if _is_warehouse(artifact_dir):
+        return "warehouse"
     return None
+
+
+def _is_warehouse(d: str) -> bool:
+    """``event_month=`` dirs, live or held by a rewrite stage (a crash
+    can leave a one-month table with its only month parked)."""
+    from .. import storage
+
+    month = "event_month="
+    if any(e.startswith(month) for e in os.listdir(d)):
+        return True
+    return any(
+        os.path.basename(live).startswith(month)
+        for p in storage.pending_swaps(d)
+        for live, _ in p.missing
+    )
 
 
 def fsck_artifact(spark: SparkSession, artifact_dir: str) -> list[dict]:
@@ -509,6 +578,8 @@ def fsck_artifact(spark: SparkSession, artifact_dir: str) -> list[dict]:
                    "no known artifact manifest or table shape here", "")]
     if fam == "ingest_corpus":
         fn = _fsck_ingest_corpus
+    elif fam == "warehouse":
+        fn = _fsck_warehouse
     else:
         fn = next(f for _m, n, f, _s in _FAMILIES if n == fam)
     findings = fn(spark, artifact_dir)

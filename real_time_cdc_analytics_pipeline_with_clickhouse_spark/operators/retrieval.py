@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.text import tokens
+from ..storage import _swap_tree  # the one rename commit; index writers import it from here
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -317,23 +318,6 @@ def update_text_index(
     meta["sum_dl"] += s
     meta["last_epoch"] = max(meta.get("last_epoch", -1), bid)
     _write_tix_manifest(index_dir, meta)
-
-
-def _swap_tree(stage: str, target: str) -> None:
-    """Replace a whole partition tree with its staged rewrite: two
-    atomic renames (old → ``__old``, stage → target) then delete the
-    old copy.  A crash can leave either the old tree live (stage
-    intact, retry safe) or, in the two-rename window, the target
-    briefly absent with BOTH copies on disk — never a half-merged
-    tree."""
-    import os
-    import shutil
-
-    old = target.rstrip("/") + "__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(target, old)
-    os.rename(stage, target)
-    shutil.rmtree(old)
 
 
 def compact_text_index(spark, index_dir: str) -> None:

@@ -84,12 +84,15 @@ def dedup_latest_event_version(df: DataFrame, key: str = "event_id", version: st
     merge time (duplicate-visible until then); applying it as a view /
     write-time compaction is the same end state, made exact.
 
-    ``max_by`` instead of a row_number window: a hash aggregate with
-    map-side partial merge — duplicates collapse BEFORE the shuffle
-    (a replayed stream re-sends the same rows to the same map tasks),
-    and no per-key sort.  Version ties are arbitrary in both
-    formulations; re-deliveries carry identical payloads, so either
-    pick is the same row.
+    ``max_by`` over structs plans as a ``SortAggregate``, not a hash
+    aggregate (a struct aggregation buffer is not hash-aggregatable),
+    with a ``Sort`` on both sides of the exchange: the partial
+    aggregate still collapses duplicates BEFORE the shuffle (a replayed
+    stream re-sends the same rows to the same map tasks), but every
+    row pays a per-key sort — about what a ``row_number`` window or
+    ``max(struct)`` costs here.  Version ties are arbitrary in every
+    formulation; re-deliveries carry identical payloads, so any pick
+    is the same row.
 
     The version is wrapped in a struct (like ``latest_event`` /
     ``compact_dim_latest``): ``max_by`` ignores rows whose ordering

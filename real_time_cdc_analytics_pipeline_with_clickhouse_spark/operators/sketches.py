@@ -37,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.window import Window
 
+from ..storage import finish_interrupted_swaps
 from ..warehouse import _stage_swap
 
 # 2^12 registers ≈ 1.6 % relative standard error — the DataSketches
@@ -121,6 +122,7 @@ def merge_uniques_increment(
     table-level ``last_epoch`` stamp and a re-delivered epoch no-ops."""
     import os
 
+    finish_interrupted_swaps(path)
     if not os.path.isdir(path):  # bootstrap: first batch creates the table
         # stage-swap so a crash mid-bootstrap can't leave a partial dir
         # the next call treats as committed state
@@ -302,6 +304,7 @@ def merge_topk_increment(
     stamp and a re-delivered epoch no-ops (crash-window safe)."""
     import os
 
+    finish_interrupted_swaps(path)
     if not os.path.isdir(path):  # atomic bootstrap (see uniques)
         _stage_swap(_epoch_stamp(topk_state(new_df, item_col, keys, m), epoch), path)
         return
@@ -516,6 +519,7 @@ def merge_log_histogram_increment(
     ``last_epoch`` stamp makes re-delivered epochs no-op."""
     import os
 
+    finish_interrupted_swaps(path)
     if not os.path.isdir(path):  # atomic bootstrap (see uniques)
         _stage_swap(
             _epoch_stamp(log_histogram_state(new_df, value_col, keys, alpha), epoch), path

@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators import rollups
+from .storage import finish_interrupted_swaps
 from .warehouse import _stage_swap, buckets_already_stamped as _buckets_already_stamped
 from .warehouse import stamped as _stamped
 
@@ -116,7 +117,7 @@ def merge_leaderboard_increment(
        written;
     3. merge = additive decimal sum, then re-rank ONLY the affected
        buckets' users;
-    4. dynamic partition overwrite commits just those buckets.
+    4. a per-partition rename commit replaces just those buckets.
 
     Exactness: decimal addition is associative/commutative, so any
     batch arrival order lands bit-identical to a full recompute
@@ -171,6 +172,10 @@ def merge_leaderboard_increment(
 
 
 def _partitioned_table_exists(path: str, partition_col: str) -> bool:
+    """The writers' probe before they read ``path``: finishes a
+    partition swap a crash left half done first, so a partition never
+    reads as missing."""
+    finish_interrupted_swaps(path)
     return os.path.isdir(path) and any(
         f.startswith(partition_col + "=") for f in os.listdir(path)
     )
@@ -222,6 +227,7 @@ def merge_event_counters_increment(
     delta = new_enriched.groupBy("event_type").agg(
         F.count("*").alias("cnt"), F.max("event_ts").alias("last_ts")
     )
+    finish_interrupted_swaps(path)
     exists = os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
     if exists:
         stored = _stamped(spark.read.parquet(path))
@@ -318,7 +324,7 @@ def merge_trending_increment(
     2. the touched minute buckets (bounded by the watermark — a
        handful per batch, collected as a short list) prune the read;
     3. merge = additive decimal sum over just those buckets;
-    4. dynamic partition overwrite commits only them.
+    4. a per-partition rename commit replaces only them.
 
     The stored table is ``trending_state`` partitioned by
     minute_bucket: partial DECIMAL sums, rank-free (ranking is a
@@ -443,13 +449,12 @@ def merge_funnel_increment(
     idempotent (re-composing the same batch can promote levels using
     its own events twice): every stored row carries ``last_epoch``,
     and on re-delivery of ``epoch`` (crash between the per-partition
-    dynamic-overwrite commits and the sink's global epoch marker)
+    rename commits and the sink's global epoch marker)
     buckets already stamped >= epoch are skipped while the rest
     compose — each bucket applies each epoch exactly once.
 
     Same bucket-scoped MERGE mechanics as the leaderboard: affected
-    ``user_bucket`` partitions only, dynamic-partition-overwrite
-    commit."""
+    ``user_bucket`` partitions only, per-partition rename commit."""
     from .operators.behavioral import funnel_segment_states, merge_funnel_states
 
     meta_dir = state_dir + "_meta"
@@ -569,6 +574,7 @@ def expire_serving_state(
 
     # trending: partition drop (minute_bucket is the directory key)
     tdir = f"{base_dir}/trending_state"
+    finish_interrupted_swaps(tdir)
     dropped = []
     if os.path.isdir(tdir):
         import datetime
@@ -615,7 +621,7 @@ def expire_serving_state(
             _stage_swap(survivors, path, partition_by="user_bucket")
         survivors.unpersist()
         # a bucket whose EVERY key expired has no survivor rows, so the
-        # dynamic overwrite never touches its partition — unlink it
+        # rewrite never touches its partition — unlink it
         # (an empty parquet dir cannot carry schema, so a fully-expired
         # table ends as deleted partitions — the Redis "key gone" state)
         for b in stale:
@@ -625,6 +631,7 @@ def expire_serving_state(
     # counters: domain-sized table, whole-row expiry
     cpath = f"{base_dir}/event_counters"
     report["event_counters_expired"] = 0
+    finish_interrupted_swaps(cpath)
     if os.path.isdir(cpath) and any(f.endswith(".parquet") for f in os.listdir(cpath)):
         cutoff_ts = now_c - F.expr(f"INTERVAL {ttls['event_counters']} SECONDS")
         stored = spark.read.parquet(cpath)

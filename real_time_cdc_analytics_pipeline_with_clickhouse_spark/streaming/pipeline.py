@@ -31,6 +31,8 @@ from ..lakehouse import (
 from ..operators.cdc import enriched_columns, unwrap_content, unwrap_engagement
 from ..operators.enrich import compact_dim_latest
 from ..operators.rollups import dedup_latest_event_version
+from ..storage import finish_interrupted_swaps, rewrite
+from ..warehouse import MONTH_COL
 
 WATERMARK_DELAY = "30 seconds"  # ESJ:88 bounded out-of-orderness
 
@@ -94,9 +96,6 @@ def dedup_within_watermark_stream(engagement_json_stream: DataFrame) -> DataFram
     )
 
 
-MONTH_COL = "event_month"  # clickhouse-init.sql:27 PARTITION BY toYYYYMM
-
-
 def merge_upsert_parquet(batch: DataFrame, target_dir: str, key: str, version: str) -> None:
     """Partition-scoped MERGE INTO emulation for a parquet target (A2).
 
@@ -104,22 +103,26 @@ def merge_upsert_parquet(batch: DataFrame, target_dir: str, key: str, version: s
     ClickHouse ``toYYYYMM(event_ts)`` layout, clickhouse-init.sql:27).
     Each micro-batch:
 
-    1. derives the set of months present in the batch (a collect of a
+    1. finishes any month swap a crash left half done
+       (``storage.finish_interrupted_swaps``) — a month read as missing
+       would be rewritten from the batch alone and lose its history;
+    2. derives the set of months present in the batch (a collect of a
        handful of month strings — bounded by the watermark, not the
        table);
-    2. reads ONLY those month partitions of the current target
+    3. reads ONLY those month partitions of the current target
        (partition pruning — untouched months are never read or
        written, so the per-batch cost is O(affected months), not
        O(table); the round-1 full-table rewrite was O(table) per batch
        ⇒ O(n²) over a stream's life);
-    3. unions the batch, keeps the max-``version`` row per ``key``
+    4. unions the batch, keeps the max-``version`` row per ``key``
        (idempotent under replay — re-delivered rows lose the
        latest-wins tiebreak);
-    4. rewrites only the affected partitions via *dynamic partition
-       overwrite*: the job commits through the Hadoop commit protocol
-       (staged task files moved into place at commit), never
-       delete-target-then-rewrite, so a crash mid-write leaves every
-       previously committed partition intact.
+    5. writes the merged months ONCE, into a stage inside the table
+       that Spark's listing skips, and commits each month by two
+       directory renames (``storage.rewrite``) — never
+       delete-target-then-rewrite, so a crash leaves every month either
+       old, new, or parked beside its staged copy for step 1 of the
+       next batch (or a replay of this one) to finish.
 
     Dedup scope note: latest-wins applies within a month partition —
     exactly ReplacingMergeTree's contract (ClickHouse deduplicates
@@ -131,6 +134,7 @@ def merge_upsert_parquet(batch: DataFrame, target_dir: str, key: str, version: s
     INSERT`` + partition pruning on the merge condition.)
     """
     spark = batch.sparkSession
+    finish_interrupted_swaps(target_dir)
     batch = batch.withColumn(MONTH_COL, F.date_format(F.col(version), "yyyyMM"))
     batch.persist()
     try:
@@ -149,22 +153,7 @@ def merge_upsert_parquet(batch: DataFrame, target_dir: str, key: str, version: s
             merged = current.select(*batch.columns).unionByName(batch)
         else:
             merged = batch
-        merged = dedup_latest_event_version(merged, key=key, version=version)
-        # staging materialization: the final write reads from staging,
-        # never from the directory it is overwriting
-        staging = target_dir.rstrip("/") + "_staging"
-        merged.write.mode("overwrite").parquet(staging)
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            (
-                spark.read.parquet(staging)
-                .write.mode("overwrite")
-                .partitionBy(MONTH_COL)
-                .parquet(target_dir)
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        rewrite(dedup_latest_event_version(merged, key=key, version=version), target_dir, MONTH_COL)
     finally:
         batch.unpersist()
 
@@ -917,7 +906,7 @@ def _staged_group_rewrite(sp_, gdir: str, staging: str, compute) -> None:
     id, while a fully-committed EARLIER epoch's leftover can never
     alias a later epoch's recovery.  Staging lives OUTSIDE the corpus
     dir (a sibling would be discovered as a bogus partition by
-    corpus-wide reads) — which is also why ``retrieval._swap_tree``
+    corpus-wide reads) — which is also why ``storage._swap_tree``
     (rename-based) is not used here: its transient ``__old`` sibling
     would sit INSIDE the partitioned corpus tree."""
     import shutil

@@ -20,7 +20,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-MONTH_COL = "event_month"
+from .storage import finish_interrupted_swaps, rewrite
+
+MONTH_COL = "event_month"  # clickhouse-init.sql:27 PARTITION BY toYYYYMM
 
 
 SAMPLE_COL = "_skey"
@@ -160,48 +162,30 @@ def _stage_swap(
     final_drop: list[str] | None = None,
 ) -> None:
     """Rewrite ``path`` from ``df`` safely while ``df`` may be reading
-    it: materialize to a staging dir, then overwrite the target from
-    the staging copy.
+    it: ``storage.rewrite`` writes ``df`` once into a stage inside the
+    table and commits it by directory rename — the whole tree for an
+    unpartitioned target, each ``partition_by`` directory present in
+    ``df`` for a partitioned one (the others keep their bytes).  A
+    crash leaves each partition old, new, or parked beside its staged
+    copy; the writer's next ``storage.finish_interrupted_swaps`` (which
+    callers run before reading the target) completes it.
 
-    For a partitioned target the final overwrite runs in *dynamic*
-    partition-overwrite mode: each partition is replaced at job commit
-    (staged task files moved into place), never delete-everything-then-
-    rewrite — a crash mid-swap loses at most the partitions whose
-    commit was in flight, and the staging copy still holds the full
-    intended state.
-
-    ``sort_within``: physical row order to impose (must LEAD with the
-    partition column — the dynamic-partition writer requires a sort on
-    the partition key and would otherwise insert its own, NON-stable,
-    sort that scrambles any clustering the caller arranged).  Applied
-    on both writes so the order survives the staging round-trip;
-    ``final_drop`` removes helper columns (e.g. a clustering key)
-    after the final sort, which preserves row order."""
-    spark = df.sparkSession
-    staging = path.rstrip("/") + "_staging"
-
-    def _ordered(d: DataFrame) -> DataFrame:
+    A partitioned rewrite is clustered by the partition column, so each
+    partition value is written by one task — one file per partition,
+    not one per task per partition.  ``sort_within``: physical row
+    order to impose within that clustering (must LEAD with the
+    partition column — the partitioned writer requires a sort on the
+    partition key and would otherwise insert its own, NON-stable, sort
+    that scrambles any order the caller arranged); ``final_drop``
+    removes helper columns (e.g. a clustering key) after the sort,
+    which preserves row order."""
+    if partition_by:
+        df = df.repartition(F.col(partition_by))
         if sort_within:
-            d = d.repartition(F.col(partition_by)).sortWithinPartitions(*sort_within)
-        return d
-
-    w = _ordered(df).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(staging)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    if partition_by:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        final = _ordered(spark.read.parquet(staging))
-        if final_drop:
-            final = final.drop(*final_drop)
-        r = final.write.mode("overwrite")
-        if partition_by:
-            r = r.partitionBy(partition_by)
-        r.parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            df = df.sortWithinPartitions(*sort_within)
+    if final_drop:
+        df = df.drop(*final_drop)
+    rewrite(df, path, partition_by)
 
 
 def zorder_key(*cols, bits: int = 16):
@@ -262,6 +246,7 @@ def compact_warehouse(
     data skipping (e.g. ``["user_id", "content_id"]`` serves both
     per-user and per-content point reads from the same layout).
     """
+    finish_interrupted_swaps(path)
     df = read_warehouse(spark, path)
     if zorder_by:
         helpers = [f"_z_{c}" for c in zorder_by]
@@ -333,6 +318,7 @@ def apply_ttl(
     import os
     import shutil
 
+    finish_interrupted_swaps(path)
     cutoff = F.lit(cutoff_ts).cast("timestamp")
     cutoff_month = spark.range(1).select(
         F.date_format(cutoff, "yyyyMM")
@@ -378,30 +364,18 @@ def apply_ttl(
             shutil.rmtree(part_dir)
             whole.append(boundary)
         else:
-            # partition-scoped rewrite: stage (we read from the target),
-            # then dynamic-overwrite replaces only this month at commit
-            staging = path.rstrip("/") + "_ttl_staging"
-            keep.withColumn(MONTH_COL, F.lit(boundary)).write.mode(
-                "overwrite"
-            ).parquet(staging)
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                (
-                    # range-partition on the sort key: a single month's
-                    # rewrite stays parallel (one file per key range),
-                    # and within each task MONTH_COL is constant so the
-                    # dynamic writer's required partition-key sort holds
-                    spark.read.parquet(staging)
-                    .repartitionByRange("event_id")
-                    .sortWithinPartitions(MONTH_COL, "event_id")
-                    .write.mode("overwrite")
-                    .partitionBy(MONTH_COL)
-                    .parquet(path)
-                )
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-            shutil.rmtree(staging, ignore_errors=True)
+            # partition-scoped rewrite of this month alone (the stage
+            # commit leaves every other month untouched); range-partition
+            # on the sort key so one month's rewrite stays parallel (one
+            # file per key range) — within each task MONTH_COL is constant,
+            # so the partitioned writer's required partition-key sort holds
+            rewrite(
+                keep.withColumn(MONTH_COL, F.lit(boundary))
+                .repartitionByRange("event_id")
+                .sortWithinPartitions(MONTH_COL, "event_id"),
+                path,
+                MONTH_COL,
+            )
             rewritten = boundary
 
     for m in whole:
@@ -461,6 +435,7 @@ def merge_rollup_increment(spark: SparkSession, path: str, new_enriched: DataFra
     SummingMergeTree partial-merge, run at write time.  Because partials
     are DECIMAL, increment order cannot change the stored values; the
     result is bit-identical to a full recompute (tested)."""
+    finish_interrupted_swaps(path)
     current = spark.read.parquet(path)
     merged = (
         current.unionByName(_partial_rollup(new_enriched))
@@ -566,8 +541,8 @@ def stamped(stored: DataFrame) -> DataFrame:
 
 def buckets_already_stamped(stored: DataFrame, bucket_col: str, epoch: int) -> set:
     """Buckets whose committed rows already carry ``epoch`` (the
-    re-delivered half of a crash between per-partition dynamic
-    overwrite commits and a sink's global epoch marker) — those skip,
+    re-delivered half of a crash between per-partition rename
+    commits and a sink's global epoch marker) — those skip,
     the rest apply.  A bounded collect: ≤ touched-bucket cardinality
     rows."""
     return {
@@ -680,6 +655,7 @@ def refresh_projections(
             touched = [r[0] for r in delta.select("pbucket").distinct().collect()]
             if not touched:
                 continue
+            finish_interrupted_swaps(meta["path"])
             stored = stamped(
                 spark.read.parquet(meta["path"]).where(F.col("pbucket").isin(touched))
             )

@@ -183,3 +183,60 @@ def test_ingest_corpus_staging_shapes(spark, tmp_path):
     f = fsck.fsck_artifact(spark, corpus)
     assert "unrecovered_group_overwrite" in _codes(f, "warn")
     assert any("restart the sink" in x["repair"] for x in f)
+
+
+def test_warehouse_interrupted_month_swap_and_leftovers(spark, tmp_path, monkeypatch):
+    """The warehouse family: a month parked between its two renames is
+    an error naming the rename repair; a parked copy whose month is
+    back, or a staged copy, is a warn; the writer's own recovery
+    (storage.finish_interrupted_swaps) clears exactly what fsck found."""
+    import datetime as dt
+
+    from real_time_cdc_analytics_pipeline_with_clickhouse_spark import storage
+    from real_time_cdc_analytics_pipeline_with_clickhouse_spark.streaming import (
+        pipeline as sp,
+    )
+
+    schema = "event_id long, event_ts timestamp, v long"
+    wh = str(tmp_path / "wh")
+    sp.merge_upsert_parquet(
+        spark.createDataFrame([(1, dt.datetime(2024, 1, 10), 5)], schema),
+        wh, key="event_id", version="event_ts",
+    )
+    f = fsck.fsck_artifact(spark, wh)
+    assert f[0]["family"] == "warehouse" and f[0]["level"] == "ok"
+
+    # crash after the only month was parked (rename 0 done, rename 1 fails)
+    calls = []
+
+    def crash_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise RuntimeError("injected crash")
+        os.rename(src, dst)
+
+    monkeypatch.setattr(storage, "_rename", crash_second)
+    batch = spark.createDataFrame([(1, dt.datetime(2024, 1, 11), 6)], schema)
+    try:
+        sp.merge_upsert_parquet(batch, wh, key="event_id", version="event_ts")
+    except RuntimeError:
+        pass
+    monkeypatch.setattr(storage, "_rename", os.rename)
+    assert not any(e.startswith("event_month=") for e in os.listdir(wh))
+    before = _tree_snapshot(wh)
+    f = fsck.fsck_artifact(spark, wh)
+    assert f[0]["family"] == "warehouse"  # detected through the stage
+    assert "interrupted_month_swap" in _codes(f, "error")
+    assert any(x["repair"].startswith("rename ") for x in f)
+    assert _tree_snapshot(wh) == before  # read-only
+
+    # the month back in place by hand, parked + staged copies left over
+    stage = next(p.stage for p in storage.pending_swaps(wh))
+    os.rename(f"{stage}/event_month=202401", f"{wh}/event_month=202401")
+    f = fsck.fsck_artifact(spark, wh)
+    assert not _codes(f, "error")
+    assert {"leftover_parked_copy", "leftover_staged_copy"} <= _codes(f, "warn")
+
+    storage.finish_interrupted_swaps(wh)
+    assert fsck.fsck_artifact(spark, wh)[0]["code"] == "healthy"
+    assert [r["v"] for r in spark.read.parquet(wh).collect()] == [6]

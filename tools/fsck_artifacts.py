@@ -3,8 +3,8 @@
 
 Usage:  python tools/fsck_artifacts.py DIR [DIR ...]
 
-Each DIR is one artifact root (a MinHash/text/IVF/phash index dir) or
-a parent holding several; parents are expanded one level.  Prints one
+Each DIR is one artifact root (a MinHash/text/IVF/phash index dir or
+a month-partitioned warehouse table) or a parent holding several; parents are expanded one level.  Prints one
 line per finding (level, family, code, path, message + repair) and
 exits non-zero iff any ``error``-level finding exists — cron-able.
 """
