@@ -33,33 +33,12 @@ import json
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.scalar import portable_hash64
 from ..functions.text import shingles_from_tokens, tokens
 
 _MANIFEST = "_model_manifest.json"
-
-
-def feature_buckets(
-    text: Column, n_buckets: int, seed: str = "qc:", hash_mode: str = "md5"
-) -> Column:
-    """Hashed feature ids (array<int>) of a text column: non-empty
-    unigrams + word bigrams, each mapped to ``portable_hash64(seed ||
-    feature) mod n_buckets``.  One array expression per row — the
-    tokenize/normalize runs once (bound as a higher-order-function
-    input, same trick as ``shingles``).  ``hash_mode="xxh64"`` swaps
-    in the production hash (same bucket geometry, different values,
-    no DuckDB twin — see ``portable_hash64``)."""
-    toks = F.filter(tokens(text), lambda x: x != "")
-    bound = F.transform(
-        F.array(toks), lambda t: F.concat(t, shingles_from_tokens(t, 2))
-    )
-    feats = F.element_at(bound, 1)
-    return F.transform(
-        feats,
-        lambda f: (portable_hash64(f, seed=seed, mode=hash_mode) % n_buckets).cast("int"),
-    )
 
 
 def _occurrences(
@@ -68,12 +47,14 @@ def _occurrences(
     """(doc_id, bucket) — one row per feature OCCURRENCE (raw counts,
     the same featurization train and score must share).
 
-    The hash runs AFTER the explode (round 12): ``feature_buckets``
-    evaluates the md5/xxh64 chain inside a ``transform`` lambda —
-    outside WholeStageCodegen — where the post-explode projection is
-    codegen'd.  Same features, same hash, same buckets (parity-
-    collected in both hash modes); measured −5% on the 10× DSIR
-    probes (counts 7.24 → 6.85 s, select 12.36 → 11.79 s,
+    Features are unigrams + word bigrams of the non-empty tokens, each
+    bucketed as ``portable_hash64(seed || feature) mod n_buckets``.
+    The hash runs AFTER the explode (round 12): hashing inside a
+    ``transform`` lambda over the feature array evaluates the
+    md5/xxh64 chain outside WholeStageCodegen, where the post-explode
+    projection is codegen'd.  Same features, same hash, same buckets
+    (parity-collected in both hash modes); measured −5% on the 10×
+    DSIR probes (counts 7.24 → 6.85 s, select 12.36 → 11.79 s,
     interleaved min-of-4)."""
     toks = F.filter(tokens(F.col("text")), lambda x: x != "")
     bound = F.transform(

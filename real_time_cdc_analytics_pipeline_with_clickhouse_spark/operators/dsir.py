@@ -11,10 +11,12 @@ just two bucket histograms and one weighted pass over the corpus.
 
 Spark-first shape, sized for the 100 TB raw side:
 
-- Features reuse the classifier's ``feature_buckets`` (hashed
-  unigrams + word bigrams, ``portable_hash64`` md5 buckets) so every
-  number in this module is recomputable by DuckDB — the weights are
-  oracle-twinned in tests/test_dsir.py.
+- Features reuse the classifier's featurization
+  (``classifier._occurrences``: hashed unigrams + word bigrams,
+  ``portable_hash64`` md5 buckets, hashed after the explode because a
+  hash inside a ``transform`` lambda runs outside WholeStageCodegen)
+  so every number in this module is recomputable by DuckDB — the
+  weights are oracle-twinned in tests/test_dsir.py.
 - Each bucket model is ONE combinable aggregation whose result is
   bounded by ``n_buckets`` (the raw corpus reduces to ≤ n_buckets
   rows before anything joins); the log-ratio table is therefore

@@ -4,13 +4,18 @@ The reference's Flink job, re-expressed: file/kafka CDC source →
 envelope normalize → watermark (T1, 30 s) → stream-static enrichment
 join against the MERGE-maintained dimension (T4/J1) → windowed rollups
 (T3/A1/A6) → foreachBatch MERGE-style upsert sink (A2/T7/T8) + JSON
-outbox (K3).
+outbox (K3), plus the serving, sketch, index-fold and corpus-ingest
+sinks.
 
-No Delta in this container, so MERGE is emulated per micro-batch as
-anti-join + union + latest-wins compaction over a parquet directory —
-at-least-once append with read/compact-time dedup, i.e. exactly the
+No Delta in this container, so MERGE is emulated per micro-batch
+(``merge_upsert_parquet``): the batch's months are read back, unioned
+with the batch and deduped latest-wins, written once into a stage
+inside the table and committed by directory renames — the
 ReplacingMergeTree contract (clickhouse-init.sql:21-22), and replay
 (T9) stays idempotent.
+
+Every ``foreachBatch`` sink starts through ``_foreach_batch_sink``,
+which holds the replay contract in one place.
 """
 
 from __future__ import annotations
@@ -158,6 +163,137 @@ def merge_upsert_parquet(batch: DataFrame, target_dir: str, key: str, version: s
         batch.unpersist()
 
 
+def _foreach_batch_sink(
+    stream: DataFrame,
+    checkpoint: str,
+    apply,
+    *,
+    meta_dir: str | None = None,
+    after_commit=None,
+    skip_empty: bool = False,
+):
+    """Start ``stream`` as an append-mode ``foreachBatch`` query
+    checkpointed at ``checkpoint`` that calls ``apply(batch, epoch)``
+    once per micro-batch — the one way every sink here starts.
+
+    ``skip_empty`` returns on an empty batch before anything else runs
+    (no replay guard, no epoch marker), for sinks that must not
+    publish or fold an empty batch.
+
+    Replay contract.  Structured Streaming re-delivers the in-flight
+    micro-batch after a restart (foreachBatch is at-least-once), so
+    re-applying an ADDITIVE merge would double-count.  A sink whose
+    apply is not idempotent passes ``meta_dir``, and each epoch then
+    runs: the replay guard (``_epoch_already_applied`` — an epoch the
+    marker already holds is skipped), ``apply``, the marker
+    (``_record_epoch``), then ``after_commit(batch, epoch)`` — the
+    sink's cadence maintenance (compaction, drift refit, TTL sweep).
+    Maintenance runs after the marker, so a crash inside it replays as
+    an already-applied epoch, never as a second apply; each maintenance
+    step is idempotent and commits by a swap that either completed or
+    left the previous state, and the next cadence tick runs it again.
+    It also runs after an epoch whose apply found nothing to fold, so
+    it must tolerate an artifact that does not exist yet.
+
+    Epoch ids are strictly increasing PER CHECKPOINT, so the marker
+    records both the last applied epoch and the checkpoint that
+    produced it (the Delta txnAppId/txnVersion shape).  A query whose
+    checkpoint differs from the marker's fails loudly before ``apply``
+    instead of either silent outcome — a fresh checkpoint restarts
+    epochs at 0, so comparing its epochs against another checkpoint's
+    marker would silently DROP its first N batches, while blindly
+    applying them would double-count whatever the state already
+    holds; only the operator can decide (reuse the original
+    checkpoint, or reset the state directory).
+
+    The marker is the FAST PATH only: a crash between the data commit
+    and the marker re-delivers that one batch past the guard, so every
+    non-idempotent merge behind it also stamps ``last_epoch`` INSIDE
+    its committed data and no-ops per table/bucket/manifest on replay
+    (the pattern pioneered by serving.merge_funnel_increment, shared
+    by the serving, sketch, projection and index folds) — the marker
+    saves re-reading state for the common clean replay, the in-data
+    stamps close the crash window.  Sinks without ``meta_dir`` are
+    idempotent per batch (dimension publish, warehouse MERGE) or stamp
+    their own commits (the DSIR model)."""
+
+    def run(batch: DataFrame, epoch: int) -> None:
+        if skip_empty and batch.isEmpty():
+            return
+        if meta_dir is None:
+            apply(batch, epoch)
+        elif not _epoch_already_applied(meta_dir, epoch, checkpoint):
+            apply(batch, epoch)
+            _record_epoch(meta_dir, epoch, checkpoint)
+            if after_commit is not None:
+                after_commit(batch, epoch)
+
+    return (
+        stream.writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(run)
+        .start()
+    )
+
+
+def _epoch_already_applied(base_dir: str, epoch: int, checkpoint: str) -> bool:
+    """True when ``base_dir``'s epoch marker already holds ``epoch``;
+    raises when the marker was written under another checkpoint (see
+    ``_foreach_batch_sink`` for the contract)."""
+    marker = os.path.join(base_dir, "_LAST_EPOCH")
+    if os.path.isfile(marker):
+        with open(marker) as fh:
+            lines = fh.read().splitlines()
+        last = int(lines[0].strip() or -1) if lines else -1
+        stored_ck = lines[1].strip() if len(lines) > 1 else None
+        if stored_ck is not None and os.path.abspath(checkpoint) != stored_ck:
+            raise RuntimeError(
+                f"epoch marker at {base_dir} was written by checkpoint "
+                f"{stored_ck!r} but this query uses "
+                f"{os.path.abspath(checkpoint)!r}; epoch ids are only "
+                "comparable within one checkpoint — reuse the original "
+                "checkpoint to resume, or reset the state directory to "
+                "reprocess from scratch"
+            )
+        return epoch <= last
+    return False
+
+
+def _record_epoch(base_dir: str, epoch: int, checkpoint: str) -> None:
+    marker = os.path.join(base_dir, "_LAST_EPOCH")
+    os.makedirs(base_dir, exist_ok=True)
+    tmp = marker + ".tmp"
+    with open(tmp, "w") as fh:
+        fh.write(f"{epoch}\n{os.path.abspath(checkpoint)}")
+    os.replace(tmp, marker)
+
+
+def _on_cadence(every: int | None, epoch: int) -> bool:
+    """True on the last epoch of each ``every``-epoch cycle, never when
+    ``every`` is unset — the clock of the sinks' compaction and TTL
+    maintenance."""
+    return bool(every) and epoch % every == every - 1
+
+
+def _refit_if_drifted(vec_dir: str, refit_threshold: float | None, refit) -> None:
+    """The centroid-drift hook of the IVF-backed sinks: once the index
+    at ``vec_dir`` exists and its manifest's ``drift_ratio`` (mean
+    assignment distance of folded batches ÷ the build-time baseline,
+    maintained for free at fold time) reaches ``refit_threshold``,
+    call ``refit()``, which builds a re-clustered version and commits
+    it by one manifest-pointer swap (queries never see a half-built
+    index) and resets the baseline, so refits do not storm.  Sinks run
+    it after the epoch marker: a crashed refit replays as an applied
+    epoch, and the still-high ratio re-triggers it after the next one."""
+    from ..operators import ivf_index
+
+    if refit_threshold is None or not ivf_index.has_ivf_index(vec_dir):
+        return
+    ratio = ivf_index.ivf_drift_ratio(vec_dir)
+    if ratio is not None and ratio >= refit_threshold:
+        refit()
+
+
 _DIM_POINTER = "_CURRENT"
 
 
@@ -292,8 +428,6 @@ def maintain_dim_table(spark: SparkSession, content_json_stream: DataFrame, dim_
     changes = unwrap_content(content_json_stream)
 
     def apply_batch(batch: DataFrame, _epoch: int) -> None:
-        if batch.isEmpty():  # no CDC rows → don't churn a new version
-            return
         sp = batch.sparkSession
         current = read_dim(sp, dim_dir)
         if current is None:
@@ -311,12 +445,8 @@ def maintain_dim_table(spark: SparkSession, content_json_stream: DataFrame, dim_
             )
         _publish_dim_version(new_dim, dim_dir)
 
-    return (
-        changes.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(apply_batch)
-        .start()
-    )
+    # no CDC rows → don't churn a new version
+    return _foreach_batch_sink(changes, checkpoint, apply_batch, skip_empty=True)
 
 
 def enriched_event_stream(spark: SparkSession, engagement_json_stream: DataFrame, dim_dir: str) -> DataFrame:
@@ -366,16 +496,20 @@ def start_enriched_warehouse_pipeline(
         dim = require_dim(sp_, dim_dir).select(
             F.col("id").alias("content_id"), "content_type", "length_seconds"
         )
-        enriched = enriched_columns(batch.join(F.broadcast(dim), "content_id", "left"))
-        merge_upsert(
-            enriched.select(*WAREHOUSE_COLUMNS), table_dir, key="event_id", version="event_ts"
+        _merge_into_warehouse(
+            enriched_columns(batch.join(F.broadcast(dim), "content_id", "left")), table_dir
         )
 
-    return (
-        events.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(events, checkpoint, sink)
+
+
+def _merge_into_warehouse(enriched: DataFrame, table_dir: str) -> None:
+    """The MERGE step both warehouse streams share: project to
+    ``WAREHOUSE_COLUMNS`` and upsert latest-``event_ts``-wins by
+    ``event_id`` (Delta ``MERGE INTO`` when available, the parquet
+    emulation otherwise — ``lakehouse.merge_upsert`` dispatches)."""
+    merge_upsert(
+        enriched.select(*WAREHOUSE_COLUMNS), table_dir, key="event_id", version="event_ts"
     )
 
 
@@ -514,77 +648,11 @@ def streaming_minute_topk_source(enriched: DataFrame) -> DataFrame:
 
 
 def start_warehouse_sink(enriched: DataFrame, table_dir: str, checkpoint: str):
-    """K1+A2 — foreachBatch MERGE upsert into the warehouse table
-    (Delta ``MERGE INTO`` when available, parquet emulation otherwise —
-    lakehouse.merge_upsert dispatches)."""
-
-    def sink(batch: DataFrame, _epoch: int) -> None:
-        merge_upsert(
-            batch.select(*WAREHOUSE_COLUMNS), table_dir, key="event_id", version="event_ts"
-        )
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    """K1+A2 — foreachBatch MERGE upsert of an already-enriched stream
+    into the warehouse table (``_merge_into_warehouse``)."""
+    return _foreach_batch_sink(
+        enriched, checkpoint, lambda batch, _epoch: _merge_into_warehouse(batch, table_dir)
     )
-
-
-def _epoch_already_applied(base_dir: str, epoch: int, checkpoint: str | None = None) -> bool:
-    """Epoch-marker idempotence guard for additive foreachBatch sinks.
-
-    Structured Streaming re-delivers the in-flight micro-batch after a
-    restart (foreachBatch is at-least-once); re-applying an ADDITIVE
-    merge would double-count.  Epoch ids are strictly increasing PER
-    CHECKPOINT, so the marker records both the last applied epoch and
-    the checkpoint that produced it (the Delta txnAppId/txnVersion
-    shape).  A caller passing a DIFFERENT checkpoint against an
-    existing marker gets a loud error instead of either silent outcome
-    — a fresh checkpoint restarts epochs at 0, so comparing its epochs
-    against another checkpoint's marker would silently DROP its first
-    N batches, while blindly applying them would double-count whatever
-    the state already holds; only the operator can decide (reuse the
-    original checkpoint, or reset the state dir).  Returns True (skip)
-    when ``epoch`` was already applied; the caller must invoke
-    ``_record_epoch`` after a successful apply.  This marker is the
-    FAST PATH only: a crash between the data commit and the marker
-    replace re-delivers that one batch past this check, so every
-    non-idempotent merge behind it also stamps ``last_epoch`` INSIDE
-    its committed data and no-ops per table/bucket on replay (the
-    pattern pioneered by serving.merge_funnel_increment, now shared by
-    the serving, uniques, topk and projection sinks) — the marker
-    saves re-reading state for the common clean-replay case, the
-    in-data stamps close the crash window."""
-    marker = os.path.join(base_dir, "_LAST_EPOCH")
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            lines = fh.read().splitlines()
-        last = int(lines[0].strip() or -1) if lines else -1
-        stored_ck = lines[1].strip() if len(lines) > 1 else None
-        if checkpoint is not None and stored_ck is not None:
-            if os.path.abspath(checkpoint) != stored_ck:
-                raise RuntimeError(
-                    f"epoch marker at {base_dir} was written by checkpoint "
-                    f"{stored_ck!r} but this query uses "
-                    f"{os.path.abspath(checkpoint)!r}; epoch ids are only "
-                    "comparable within one checkpoint — reuse the original "
-                    "checkpoint to resume, or reset the state directory to "
-                    "reprocess from scratch"
-                )
-        return epoch <= last
-    return False
-
-
-def _record_epoch(base_dir: str, epoch: int, checkpoint: str | None = None) -> None:
-    marker = os.path.join(base_dir, "_LAST_EPOCH")
-    os.makedirs(base_dir, exist_ok=True)
-    tmp = marker + ".tmp"
-    with open(tmp, "w") as fh:
-        fh.write(str(epoch))
-        if checkpoint is not None:
-            fh.write("\n" + os.path.abspath(checkpoint))
-    os.replace(tmp, marker)
 
 
 def start_serving_sink(
@@ -609,33 +677,30 @@ def start_serving_sink(
     ``ttl_every=N`` additionally runs the Redis EXPIRE analog
     (``serving.expire_serving_state``) every N epochs, clocked by the
     stream's own event time (the batch's max event_ts — the serving
-    layer's notion of "now", deterministic under replay).  Expiry is
-    monotone/idempotent state surgery, so a crash between the sweep
-    and the epoch marker replays harmlessly, and a later increment
-    for an expired key bootstraps it again — INCR-after-EXPIRE
-    semantics."""
+    layer's notion of "now", deterministic under replay).  The sweep
+    runs after the epoch marker; expiry is monotone/idempotent state
+    surgery, so a crash inside it only defers the expiry to the next
+    sweep, and a later increment for an expired key bootstraps it
+    again — INCR-after-EXPIRE semantics."""
     from ..serving import apply_serving_increment, expire_serving_state
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(base_dir, epoch, checkpoint):
+    def expire(batch: DataFrame, epoch: int) -> None:
+        if not _on_cadence(ttl_every, epoch):
             return
-        apply_serving_increment(batch.sparkSession, base_dir, batch, epoch=epoch)
-        if ttl_every and epoch % ttl_every == ttl_every - 1:
-            mx = batch.agg(F.max("event_ts")).first()[0]
-            if mx is not None:
-                expire_serving_state(
-                    batch.sparkSession,
-                    base_dir,
-                    mx.strftime("%Y-%m-%d %H:%M:%S"),
-                    ttls=ttls,
-                )
-        _record_epoch(base_dir, epoch, checkpoint)
+        mx = batch.agg(F.max("event_ts")).first()[0]
+        if mx is not None:
+            expire_serving_state(
+                batch.sparkSession, base_dir, mx.strftime("%Y-%m-%d %H:%M:%S"), ttls=ttls
+            )
 
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: apply_serving_increment(
+            batch.sparkSession, base_dir, batch, epoch=epoch
+        ),
+        meta_dir=base_dir,
+        after_commit=expire,
     )
 
 
@@ -651,17 +716,13 @@ def start_uniques_sink(enriched: DataFrame, state_dir: str, checkpoint: str):
     commit-vs-marker crash window."""
     from ..operators.sketches import merge_uniques_increment
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(state_dir + "_meta", epoch, checkpoint):
-            return
-        merge_uniques_increment(batch.sparkSession, state_dir, batch, epoch=epoch)
-        _record_epoch(state_dir + "_meta", epoch, checkpoint)
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: merge_uniques_increment(
+            batch.sparkSession, state_dir, batch, epoch=epoch
+        ),
+        meta_dir=state_dir + "_meta",
     )
 
 
@@ -682,19 +743,13 @@ def start_topk_sink(
     the commit-vs-marker crash window."""
     from ..operators.sketches import merge_topk_increment
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(state_dir + "_meta", epoch, checkpoint):
-            return
-        merge_topk_increment(
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: merge_topk_increment(
             batch.sparkSession, state_dir, batch, item_col, list(keys), m, epoch=epoch
-        )
-        _record_epoch(state_dir + "_meta", epoch, checkpoint)
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+        ),
+        meta_dir=state_dir + "_meta",
     )
 
 
@@ -711,17 +766,13 @@ def start_projection_sink(enriched: DataFrame, proj_root: str, checkpoint: str):
     projections the crash left behind)."""
     from ..warehouse import refresh_projections
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(proj_root + "_meta", epoch, checkpoint):
-            return
-        refresh_projections(batch.sparkSession, proj_root, batch, epoch=epoch)
-        _record_epoch(proj_root + "_meta", epoch, checkpoint)
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: refresh_projections(
+            batch.sparkSession, proj_root, batch, epoch=epoch
+        ),
+        meta_dir=proj_root + "_meta",
     )
 
 
@@ -745,19 +796,13 @@ def start_quantile_sink(
 
     a = DEFAULT_ALPHA if alpha is None else alpha
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(state_dir + "_meta", epoch, checkpoint):
-            return
-        merge_log_histogram_increment(
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: merge_log_histogram_increment(
             batch.sparkSession, state_dir, batch, value_col, list(keys), a, epoch=epoch
-        )
-        _record_epoch(state_dir + "_meta", epoch, checkpoint)
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+        ),
+        meta_dir=state_dir + "_meta",
     )
 
 
@@ -814,15 +859,9 @@ def start_embedding_index_sink(
     the loop (no refit storm).  It runs AFTER the epoch marker: a
     crash mid-refit replays as an applied epoch, and the still-high
     ratio re-triggers the refit on the next fold."""
-    sink = _ivf_fold_sink(
-        index_dir, checkpoint, n_centroids, seed, op_col=op_col, seq_col=seq_col,
-        refit_threshold=refit_threshold, fit_fraction=fit_fraction,
-    )
-    return (
-        emb_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _ivf_fold_sink(
+        emb_stream, index_dir, checkpoint, n_centroids, seed, op_col=op_col,
+        seq_col=seq_col, refit_threshold=refit_threshold, fit_fraction=fit_fraction,
     )
 
 
@@ -856,19 +895,7 @@ def _guard_index_adoption(meta_dir: str, existing_batches, kind: str) -> None:
     marker = os.path.join(
         meta_dir, "_ADOPTED_INDEX_" + kind.replace(" ", "_")
     )
-    # pre-round-9 adoptions were recorded under the shared name —
-    # honoring it preserves upgrade continuity for already-adopted
-    # deployments (whose fold batches are legitimately non-negative by
-    # now and would otherwise refuse forever).  ONLY for MinHash: the
-    # legacy sinks (start_corpus_ingest_sink et al.) guarded exactly
-    # that one index, so the shared marker can only ever have meant a
-    # MinHash adoption — letting it waive the text/IVF/passage checks
-    # in a composite sink that reuses the same meta dir would mask
-    # exactly what the kind-scoping change fixed (round-9 advisor).
-    if os.path.isfile(marker) or (
-        kind == "MinHash"
-        and os.path.isfile(os.path.join(meta_dir, "_ADOPTED_INDEX"))
-    ):
+    if os.path.isfile(marker):
         return
     batches = sorted(existing_batches)
     if all(b < 0 for b in batches):
@@ -1035,6 +1062,7 @@ def _run_fold_legs(legs, spark=None) -> None:
 
 
 def _ivf_fold_sink(
+    stream: DataFrame,
     index_dir: str,
     checkpoint: str,
     n_centroids: int,
@@ -1043,23 +1071,20 @@ def _ivf_fold_sink(
     seq_col: str | None = None,
     refit_threshold: float | None = None,
     fit_fraction: float | None = None,
+    transform=None,
 ):
-    """The build-on-first-batch / frozen-fold-after foreachBatch body
-    shared by the embedding-stream and document-stream index sinks
-    (see ``start_embedding_index_sink`` for the crash-window,
-    CDC-mode and drift-refit contracts).  ``transform`` maps the
-    arriving batch to the (vec_id, embedding) rows to index — it must
-    be DETERMINISTIC, so a replayed epoch rewrites identical bytes."""
+    """The build-on-first-batch / frozen-fold-after sink shared by the
+    embedding-, document- and asset-stream index sinks (see
+    ``start_embedding_index_sink`` for the crash-window, CDC-mode and
+    drift-refit contracts).  ``transform`` maps the arriving batch to
+    the (vec_id, embedding) rows to index — it must be DETERMINISTIC,
+    so a replayed epoch rewrites identical bytes."""
     from ..operators import ivf_index
 
     meta_dir = index_dir + "_sinkmeta"
     build_marker = os.path.join(meta_dir, "_BUILD_EPOCH")
 
-    def sink(batch: DataFrame, epoch: int, transform=None) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         spark_b = batch.sparkSession
         dels = None
         if op_col is not None:
@@ -1073,8 +1098,7 @@ def _ivf_fold_sink(
         try:
             ups_empty = vecs.isEmpty()
             if ups_empty and dels is None:
-                _record_epoch(meta_dir, epoch, checkpoint)  # nothing to index
-                return
+                return  # nothing to index
             built_by = None
             if os.path.isfile(build_marker):
                 with open(build_marker) as fh:
@@ -1117,11 +1141,6 @@ def _ivf_fold_sink(
                 and not dels.isEmpty()
             ):
                 ivf_index.delete_from_ivf_index(spark_b, index_dir, dels)
-            _record_epoch(meta_dir, epoch, checkpoint)
-            if refit_threshold is not None and ivf_index.has_ivf_index(index_dir):
-                ratio = ivf_index.ivf_drift_ratio(index_dir)
-                if ratio is not None and ratio >= refit_threshold:
-                    ivf_index.refit_ivf_index(spark_b, index_dir)
         finally:
             # unpersist even when build/update raises: a retried
             # micro-batch would otherwise stack a fresh cache per
@@ -1129,7 +1148,16 @@ def _ivf_fold_sink(
             if transform is not None:
                 vecs.unpersist()
 
-    return sink
+    def refit(batch: DataFrame, _epoch: int) -> None:
+        _refit_if_drifted(
+            index_dir,
+            refit_threshold,
+            lambda: ivf_index.refit_ivf_index(batch.sparkSession, index_dir),
+        )
+
+    return _foreach_batch_sink(
+        stream, checkpoint, fold, meta_dir=meta_dir, after_commit=refit, skip_empty=True
+    )
 
 
 def start_document_embedding_index_sink(
@@ -1158,11 +1186,6 @@ def start_document_embedding_index_sink(
     document firehose, no external embedding service in the loop."""
     from ..operators import embedder
 
-    fold = _ivf_fold_sink(
-        index_dir, checkpoint, n_centroids, seed,
-        refit_threshold=refit_threshold, fit_fraction=fit_fraction,
-    )
-
     def transform(batch: DataFrame) -> DataFrame:
         return (
             embedder.embed_documents(batch, dim=dim)
@@ -1170,14 +1193,9 @@ def start_document_embedding_index_sink(
             .select("vec_id", "embedding")
         )
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        fold(batch, epoch, transform=transform)
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _ivf_fold_sink(
+        docs_stream, index_dir, checkpoint, n_centroids, seed,
+        refit_threshold=refit_threshold, fit_fraction=fit_fraction, transform=transform,
     )
 
 
@@ -1205,11 +1223,6 @@ def start_asset_embedding_index_sink(
     findable from the sink-built index)."""
     from ..operators.asset_embed import embed_assets
 
-    fold = _ivf_fold_sink(
-        index_dir, checkpoint, n_centroids, seed,
-        refit_threshold=refit_threshold, fit_fraction=fit_fraction,
-    )
-
     def transform(batch: DataFrame) -> DataFrame:
         emb = embed_assets(batch)
         return emb.where(
@@ -1217,14 +1230,9 @@ def start_asset_embedding_index_sink(
             > 0
         ).select("vec_id", "embedding")
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        fold(batch, epoch, transform=transform)
-
-    return (
-        assets_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _ivf_fold_sink(
+        assets_stream, index_dir, checkpoint, n_centroids, seed,
+        refit_threshold=refit_threshold, fit_fraction=fit_fraction, transform=transform,
     )
 
 
@@ -1253,22 +1261,14 @@ def start_quality_scoring_sink(
 
     meta_dir = out_dir + "_sinkmeta"
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def score(batch: DataFrame, epoch: int) -> None:
         scored = classifier.score_quality_from_model(
             batch.sparkSession, batch, model_dir, threshold=threshold
         )
         scored.write.mode("overwrite").parquet(f"{out_dir}/batch={epoch}")
-        _record_epoch(meta_dir, epoch, checkpoint)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, score, meta_dir=meta_dir, skip_empty=True
     )
 
 
@@ -1295,11 +1295,7 @@ def start_bpe_encode_sink(
     meta_dir = out_dir + "_sinkmeta"
     state: dict = {}
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def encode(batch: DataFrame, epoch: int) -> None:
         if "merges" not in state:
             merges, alphabet = bpe.load_bpe_model(batch.sparkSession, model_dir)
             state["merges"], state["alphabet"] = merges.persist(), alphabet
@@ -1307,13 +1303,9 @@ def start_bpe_encode_sink(
             batch, state["merges"], base_alphabet=state["alphabet"]
         )
         encoded.write.mode("overwrite").parquet(f"{out_dir}/batch={epoch}")
-        _record_epoch(meta_dir, epoch, checkpoint)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, encode, meta_dir=meta_dir, skip_empty=True
     )
 
 
@@ -1339,23 +1331,15 @@ def start_unigram_encode_sink(
     meta_dir = out_dir + "_sinkmeta"
     state: dict = {}
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def encode(batch: DataFrame, epoch: int) -> None:
         if "enc" not in state:
             vocab, _meta = unigram.load_unigram_model(batch.sparkSession, model_dir)
             state["enc"] = unigram.prepare_unigram_encoder(vocab)
         encoded = unigram.unigram_encode_ids(batch, prepared=state["enc"])
         encoded.write.mode("overwrite").parquet(f"{out_dir}/batch={epoch}")
-        _record_epoch(meta_dir, epoch, checkpoint)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, encode, meta_dir=meta_dir, skip_empty=True
     )
 
 
@@ -1381,19 +1365,14 @@ def start_dsir_model_sink(
     ≡ one batch update on the union (tested)."""
     from ..operators import dsir
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        dsir.update_dsir_model(
+    return _foreach_batch_sink(
+        docs_stream,
+        checkpoint,
+        lambda batch, epoch: dsir.update_dsir_model(
             batch.sparkSession, model_dir, raw_batch=batch, epoch=epoch,
             checkpoint=checkpoint,
-        )
-
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+        ),
+        skip_empty=True,
     )
 
 
@@ -1422,11 +1401,7 @@ def start_corpus_report_sink(
 
     meta_dir = base_dir + "_sinkmeta"
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         spark = batch.sparkSession
         corpus.merge_corpus_card_increment(
             spark, f"{base_dir}/card", batch, lgk=lgk, epoch=epoch
@@ -1439,13 +1414,9 @@ def start_corpus_report_sink(
             ["source", "lang"],
             epoch=epoch,
         )
-        _record_epoch(meta_dir, epoch, checkpoint)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, fold, meta_dir=meta_dir, skip_empty=True
     )
 
 
@@ -1529,11 +1500,7 @@ def start_text_index_sink(
     meta_dir = index_dir + "_sinkmeta"
     build_marker = os.path.join(meta_dir, "_BUILD_EPOCH")
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         # op_col = the CDC-maintained-index mode: the index follows the
         # SOURCE TABLE, not an append log — op != 'd' UPSERTs (tombstone
         # any live version, append the new), op = 'd' DELETEs, deletes
@@ -1576,16 +1543,14 @@ def start_text_index_sink(
             and not dels.isEmpty()
         ):
             retrieval.delete_from_text_index(spark_b, index_dir, dels)
-        if (compact_every and epoch % compact_every == compact_every - 1
-                and os.path.isdir(f"{index_dir}/postings")):
-            retrieval.compact_text_index(spark_b, index_dir)
-        _record_epoch(meta_dir, epoch, checkpoint)
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    def compact(batch: DataFrame, epoch: int) -> None:
+        if _on_cadence(compact_every, epoch) and os.path.isdir(f"{index_dir}/postings"):
+            retrieval.compact_text_index(batch.sparkSession, index_dir)
+
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=compact,
+        skip_empty=True,
     )
 
 
@@ -1610,19 +1575,13 @@ def start_funnel_sink(
     half-committed batch would otherwise fabricate levels."""
     from ..serving import merge_funnel_increment
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if _epoch_already_applied(state_dir + "_meta", epoch, checkpoint):
-            return
-        merge_funnel_increment(
+    return _foreach_batch_sink(
+        enriched,
+        checkpoint,
+        lambda batch, epoch: merge_funnel_increment(
             batch.sparkSession, state_dir, batch, steps, window_s, epoch=epoch
-        )
-        _record_epoch(state_dir + "_meta", epoch, checkpoint)
-
-    return (
-        enriched.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+        ),
+        meta_dir=state_dir + "_meta",
     )
 
 
@@ -1726,28 +1685,7 @@ def start_asset_ingest_sink(
     gsize = compact_every or 1
     mh = pidx.PHASH_BANDS - 1 if max_hamming is None else max_hamming
 
-    def _group_dirs():
-        if not os.path.isdir(corpus_dir):
-            return []
-        return sorted(
-            f"{corpus_dir}/{d}"
-            for d in os.listdir(corpus_dir)
-            if d.startswith("batch_group=")
-        )
-
-    def _remove_ids_from_corpus(sp_, ids, epoch: int) -> None:
-        _remove_ids_from_group_dirs(sp_, corpus_dir, meta_dir, ids, "asset_id", epoch)
-
-    def _merge_into_group(sp_, kept, epoch: int) -> None:
-        _merge_into_group_dir(
-            sp_, corpus_dir, meta_dir, kept, epoch // gsize, "asset_id", epoch
-        )
-
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         sp_ = batch.sparkSession
         ups, dels = batch, None
         if op_col is not None:
@@ -1766,7 +1704,6 @@ def start_asset_ingest_sink(
         if bootstrap and ups_empty:
             # pure-delete batch before any content: nothing to build,
             # nothing to delete from
-            _record_epoch(meta_dir, epoch, checkpoint)
             return
         if not bootstrap and op_col is not None:
             # CDC: stale versions stop acting as precedent BEFORE the
@@ -1802,9 +1739,13 @@ def start_asset_ingest_sink(
             gone = ups.select("asset_id")
             if dels is not None:
                 gone = gone.unionByName(dels.select("asset_id"))
-            _remove_ids_from_corpus(sp_, gone.distinct(), epoch)
+            _remove_ids_from_group_dirs(
+                sp_, corpus_dir, meta_dir, gone.distinct(), "asset_id", epoch
+            )
         if kept is not None:
-            _merge_into_group(sp_, kept, epoch)
+            _merge_into_group_dir(
+                sp_, corpus_dir, meta_dir, kept, epoch // gsize, "asset_id", epoch
+            )
         if bootstrap:
             os.makedirs(meta_dir, exist_ok=True)
             with open(build_marker, "w") as fh:  # before the build: a crash
@@ -1817,15 +1758,14 @@ def start_asset_ingest_sink(
             pidx.update_phash_index(
                 ups, index_dir, epoch=epoch, checkpoint=checkpoint
             )
-        _record_epoch(meta_dir, epoch, checkpoint)
-        if compact_every and epoch % compact_every == compact_every - 1:
-            pidx.compact_phash_index(sp_, index_dir)
 
-    return (
-        assets_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    def compact(batch: DataFrame, epoch: int) -> None:
+        if _on_cadence(compact_every, epoch) and os.path.isdir(f"{index_dir}/{pidx.FP_TABLE}"):
+            pidx.compact_phash_index(batch.sparkSession, index_dir)
+
+    return _foreach_batch_sink(
+        assets_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=compact,
+        skip_empty=True,
     )
 
 
@@ -1913,11 +1853,7 @@ def start_media_ingest_sink(
         with open(path) as fh:
             return int(fh.read().strip() or -1)
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         sp_ = batch.sparkSession
         built_by = _marker(build_marker)
         ivf_built_by = _marker(ivf_build_marker)
@@ -2012,19 +1948,20 @@ def start_media_ingest_sink(
             if drops is not None:
                 drops.unpersist()
             feats.unpersist()
-        _record_epoch(meta_dir, epoch, checkpoint)
-        if refit_threshold is not None and ivf_index.has_ivf_index(ivf_index_dir):
-            ratio = ivf_index.ivf_drift_ratio(ivf_index_dir)
-            if ratio is not None and ratio >= refit_threshold:
-                ivf_index.refit_ivf_index(sp_, ivf_index_dir)
-        if compact_every and epoch % compact_every == compact_every - 1:
+
+    def maintain(batch: DataFrame, epoch: int) -> None:
+        sp_ = batch.sparkSession
+        _refit_if_drifted(
+            ivf_index_dir,
+            refit_threshold,
+            lambda: ivf_index.refit_ivf_index(sp_, ivf_index_dir),
+        )
+        if _on_cadence(compact_every, epoch):
             pidx.compact_phash_index(sp_, phash_index_dir)
 
-    return (
-        assets_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        assets_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=maintain,
+        skip_empty=True,
     )
 
 
@@ -2167,28 +2104,7 @@ def start_corpus_ingest_sink(
     build_marker = os.path.join(meta_dir, "_BUILD_EPOCH")
     gsize = compact_every or 1
 
-    def _group_dirs():
-        if not os.path.isdir(corpus_dir):
-            return []
-        return sorted(
-            f"{corpus_dir}/{d}"
-            for d in os.listdir(corpus_dir)
-            if d.startswith("batch_group=")
-        )
-
-    def _remove_ids_from_corpus(sp_, ids, epoch: int) -> None:
-        _remove_ids_from_group_dirs(sp_, corpus_dir, meta_dir, ids, "doc_id", epoch)
-
-    def _merge_into_group(sp_, kept, epoch: int) -> None:
-        _merge_into_group_dir(
-            sp_, corpus_dir, meta_dir, kept, epoch // gsize, "doc_id", epoch
-        )
-
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         sp_ = batch.sparkSession
         ups, dels = batch, None
         if op_col is not None:
@@ -2250,7 +2166,6 @@ def start_corpus_ingest_sink(
                 # nothing survived the gates (or a pure-delete batch
                 # before any content): nothing to build, nothing in the
                 # corpus to delete from
-                _record_epoch(meta_dir, epoch, checkpoint)
                 return
             if not bootstrap and op_col is not None:
                 # CDC: stale versions stop acting as precedent BEFORE
@@ -2297,9 +2212,13 @@ def start_corpus_ingest_sink(
                 gone = ups.select("doc_id")
                 if dels is not None:
                     gone = gone.unionByName(dels.select("doc_id"))
-                _remove_ids_from_corpus(sp_, gone.distinct(), epoch)
+                _remove_ids_from_group_dirs(
+                    sp_, corpus_dir, meta_dir, gone.distinct(), "doc_id", epoch
+                )
             if kept is not None:
-                _merge_into_group(sp_, kept, epoch)
+                _merge_into_group_dir(
+                    sp_, corpus_dir, meta_dir, kept, epoch // gsize, "doc_id", epoch
+                )
             if bootstrap:
                 os.makedirs(meta_dir, exist_ok=True)
                 with open(build_marker, "w") as fh:  # before the build: a crash
@@ -2323,18 +2242,14 @@ def start_corpus_ingest_sink(
             docs.unpersist()
             if kept is not None:
                 kept.unpersist()
-        _record_epoch(meta_dir, epoch, checkpoint)
-        if compact_every and epoch % compact_every == compact_every - 1:
-            # after the marker: a crash mid-compaction replays as an
-            # already-applied epoch (no re-append) and the swap either
-            # completed or left the original bytes
-            lsh_index.compact_minhash_index(sp_, index_dir)
 
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    def compact(batch: DataFrame, epoch: int) -> None:
+        if _on_cadence(compact_every, epoch) and os.path.isdir(f"{index_dir}/bands"):
+            lsh_index.compact_minhash_index(batch.sparkSession, index_dir)
+
+    return _foreach_batch_sink(
+        doc_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=compact,
+        skip_empty=True,
     )
 
 
@@ -2719,11 +2634,7 @@ def start_document_ingest_sink(
         json.dump(layout, fh)
     os.replace(_ltmp, os.path.join(meta_dir, _SINK_LAYOUT))
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         sp_ = batch.sparkSession
         ups, dels = batch, None
         if op_col is not None:
@@ -2801,7 +2712,6 @@ def start_document_ingest_sink(
             bootstrap = not has_index or built_by == epoch
             ups_empty = gated.isEmpty()
             if bootstrap and ups_empty:
-                _record_epoch(meta_dir, epoch, checkpoint)
                 return
 
             arriving = None
@@ -3066,9 +2976,15 @@ def start_document_ingest_sink(
             docs.unpersist()
             if kept is not None:
                 kept.unpersist()
-        _record_epoch(meta_dir, epoch, checkpoint)
-        if compact_every and epoch % compact_every == compact_every - 1:
-            lsh_index.compact_minhash_index(sp_, minhash_index_dir)
+
+    def maintain(batch: DataFrame, epoch: int) -> None:
+        from ..operators import passage as psg
+
+        sp_ = batch.sparkSession
+        psg_vecs = f"{passage_index_dir}/vectors" if passage_index_dir is not None else None
+        if _on_cadence(compact_every, epoch):
+            if os.path.isdir(f"{minhash_index_dir}/bands"):
+                lsh_index.compact_minhash_index(sp_, minhash_index_dir)
             if os.path.isdir(f"{text_index_dir}/postings"):
                 retrieval.compact_text_index(sp_, text_index_dir)
             if ivf_index.has_ivf_index(embedding_index_dir):
@@ -3077,35 +2993,24 @@ def start_document_ingest_sink(
             # cadence missed (round 10): its CDC tombstones and
             # per-epoch batch dirs accumulate exactly like the
             # document-level indexes'
-            if passage_index_dir is not None and ivf_index.has_ivf_index(
-                f"{passage_index_dir}/vectors"
-            ):
-                from ..operators import passage as psg
-
-                ivf_index.compact_ivf_index(sp_, f"{passage_index_dir}/vectors")
+            if psg_vecs is not None and ivf_index.has_ivf_index(psg_vecs):
+                ivf_index.compact_ivf_index(sp_, psg_vecs)
                 psg.compact_passage_table(sp_, passage_index_dir)
-        if refit_threshold is not None and ivf_index.has_ivf_index(
-            embedding_index_dir
-        ):
-            ratio = ivf_index.ivf_drift_ratio(embedding_index_dir)
-            if ratio is not None and ratio >= refit_threshold:
-                ivf_index.refit_ivf_index(sp_, embedding_index_dir)
-        if (
-            refit_threshold is not None
-            and passage_index_dir is not None
-            and ivf_index.has_ivf_index(f"{passage_index_dir}/vectors")
-        ):
-            ratio = ivf_index.ivf_drift_ratio(f"{passage_index_dir}/vectors")
-            if ratio is not None and ratio >= refit_threshold:
-                from ..operators import passage as psg
+        _refit_if_drifted(
+            embedding_index_dir,
+            refit_threshold,
+            lambda: ivf_index.refit_ivf_index(sp_, embedding_index_dir),
+        )
+        if psg_vecs is not None:
+            _refit_if_drifted(
+                psg_vecs,
+                refit_threshold,
+                lambda: psg.refit_passage_index(sp_, passage_index_dir),
+            )
 
-                psg.refit_passage_index(sp_, passage_index_dir)
-
-    return (
-        doc_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        doc_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=maintain,
+        skip_empty=True,
     )
 
 
@@ -3154,11 +3059,7 @@ def start_passage_index_sink(
     build_marker = os.path.join(meta_dir, "_BUILD_EPOCH")
     vec_dir = f"{index_dir}/vectors"
 
-    def sink(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
-        if _epoch_already_applied(meta_dir, epoch, checkpoint):
-            return
+    def fold(batch: DataFrame, epoch: int) -> None:
         sp_ = batch.sparkSession
         ups, dels = batch, None
         if op_col is not None:
@@ -3181,7 +3082,6 @@ def start_passage_index_sink(
             if ups_empty:
                 # pure-delete batch before any content: nothing to
                 # build, nothing to delete from
-                _record_epoch(meta_dir, epoch, checkpoint)
                 return
             os.makedirs(meta_dir, exist_ok=True)
             with open(build_marker, "w") as fh:  # before the build: a crash
@@ -3219,33 +3119,26 @@ def start_passage_index_sink(
                 psg.update_passage_index(
                     docs, index_dir, epoch=epoch, checkpoint=checkpoint
                 )
-        _record_epoch(meta_dir, epoch, checkpoint)
-        if compact_every and epoch % compact_every == compact_every - 1:
+
+    def maintain(batch: DataFrame, epoch: int) -> None:
+        sp_ = batch.sparkSession
+        if _on_cadence(compact_every, epoch) and ivf_index.has_ivf_index(vec_dir):
             # small-file + tombstone lifecycle, same cadence contract
             # as every other fold sink (round 10 — this sink was the
             # one without it)
-            if ivf_index.has_ivf_index(vec_dir):
-                ivf_index.compact_ivf_index(sp_, vec_dir)
-                psg.compact_passage_table(sp_, index_dir)
+            ivf_index.compact_ivf_index(sp_, vec_dir)
+            psg.compact_passage_table(sp_, index_dir)
         # drift-refit hook (round-8 verdict: this was the ONE fold
         # sink without it — and the chunk-vector index is the most
         # drift-exposed artifact, since chunking multiplies vectors
         # ~15× and a domain-drifting corpus shifts chunk space
-        # first).  Runs AFTER the epoch marker: a crash mid-refit
-        # replays as an applied epoch and the still-high ratio
-        # re-triggers on the next fold.  The refit preserves pid
-        # invertibility and passage-table reachability
-        # (refit_passage_index's contract) and commits by the vector
-        # manifest's atomic version-pointer swap, so a concurrent
-        # passage_topk never sees a half-built version.
-        if refit_threshold is not None and ivf_index.has_ivf_index(vec_dir):
-            ratio = ivf_index.ivf_drift_ratio(vec_dir)
-            if ratio is not None and ratio >= refit_threshold:
-                psg.refit_passage_index(sp_, index_dir)
+        # first).  The refit preserves pid invertibility and
+        # passage-table reachability (refit_passage_index's contract).
+        _refit_if_drifted(
+            vec_dir, refit_threshold, lambda: psg.refit_passage_index(sp_, index_dir)
+        )
 
-    return (
-        docs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink)
-        .start()
+    return _foreach_batch_sink(
+        docs_stream, checkpoint, fold, meta_dir=meta_dir, after_commit=maintain,
+        skip_empty=True,
     )

@@ -341,7 +341,7 @@ def test_streaming_funnel_sink_equals_batch(spark, sf_dir, tmp_path):
 
     got = serving.get_funnel_levels(spark, state_dir, STEPS)
     _assert_same_levels(got, behavioral.funnel_levels(eng, STEPS, WINDOW_S))
-    assert sp._epoch_already_applied(state_dir + "_meta", 0)
+    assert sp._epoch_already_applied(state_dir + "_meta", 0, str(tmp_path / "ck_funnel"))
     eng.unpersist()
 
 

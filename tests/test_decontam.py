@@ -239,7 +239,7 @@ def test_corpus_ingest_sink_benchmark_gate(spark, tmp_path):
     }
     assert not idx_ids & {10, 11, 12}
     # the pure-contamination epoch was applied (no replay later)
-    assert sp._epoch_already_applied(corpus_dir + "_meta", 2)
+    assert sp._epoch_already_applied(corpus_dir + "_meta", 2, str(tmp_path / "ck"))
 
 
 def test_fuzzy_dedup_keep_by_cluster_canonical(spark):

@@ -156,8 +156,8 @@ def test_streaming_embedding_index_sink(spark, sf_dir, tmp_path):
     assert got == want and got
 
     # restart replay: all three epochs marked applied, nothing re-appends
-    assert sp._epoch_already_applied(idx + "_sinkmeta", 2)
-    assert not sp._epoch_already_applied(idx + "_sinkmeta", 3)
+    assert sp._epoch_already_applied(idx + "_sinkmeta", 2, str(tmp_path / "ck_emb"))
+    assert not sp._epoch_already_applied(idx + "_sinkmeta", 3, str(tmp_path / "ck_emb"))
 
     # crash-WINDOW replay of epoch 2 (append committed, marker not):
     # the batch=<epoch> overwrite rewrites identical content — row

@@ -118,9 +118,9 @@ def test_streaming_corpus_ingest_dedups_across_batches(spark, sf_dir, tmp_path):
     # same marker protocol the serving sink proves end-to-end in
     # test_serving.test_streaming_serving_sink_equals_batch_recompute);
     # the marker lives beside the corpus so compaction can't clobber it
-    assert sp._epoch_already_applied(corpus_dir + "_meta", 0)
-    assert sp._epoch_already_applied(corpus_dir + "_meta", 1)
-    assert not sp._epoch_already_applied(corpus_dir + "_meta", 2)
+    assert sp._epoch_already_applied(corpus_dir + "_meta", 0, str(tmp_path / "ckpt"))
+    assert sp._epoch_already_applied(corpus_dir + "_meta", 1, str(tmp_path / "ckpt"))
+    assert not sp._epoch_already_applied(corpus_dir + "_meta", 2, str(tmp_path / "ckpt"))
 
     # crash-WINDOW replay of epoch 1 (its index append committed, the
     # marker did not): verdicts must be identical even though the

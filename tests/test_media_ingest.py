@@ -201,8 +201,8 @@ def test_unified_media_sink_matches_batch_pipeline(spark, sf_dir, tmp_path):
     assert got == want and got
 
     # 4) one epoch marker per batch; a replayed epoch is a no-op
-    assert sp._epoch_already_applied(corpus + "_meta", 2)
-    assert not sp._epoch_already_applied(corpus + "_meta", 3)
+    assert sp._epoch_already_applied(corpus + "_meta", 2, str(tmp_path / "ck"))
+    assert not sp._epoch_already_applied(corpus + "_meta", 3, str(tmp_path / "ck"))
     # planted cross-batch copies died everywhere
     copies = {r.asset_id for r in _copies(spark, b1, 100_000, n=8).collect()}
     assert not (copies & got_corpus) and not (copies & live_ids)

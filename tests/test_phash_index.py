@@ -203,8 +203,8 @@ def test_streaming_asset_ingest_sink_dedups_across_batches(
     assert got == want
     # cross-batch copies died; epochs marked; replay appends nothing
     assert not ({r.asset_id for r in _copies(spark, b1, 100_000, n=8).collect()} & got)
-    assert sp._epoch_already_applied(corpus + "_meta", 2)
-    assert not sp._epoch_already_applied(corpus + "_meta", 3)
+    assert sp._epoch_already_applied(corpus + "_meta", 2, str(tmp_path / "ck"))
+    assert not sp._epoch_already_applied(corpus + "_meta", 3, str(tmp_path / "ck"))
     # crash-window replay of epoch 2: verdicts identical even though
     # the replay sees its own append in the index (a < b rule), and a
     # duplicate index append changes nothing

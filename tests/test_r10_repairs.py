@@ -6,10 +6,9 @@
    completed this-epoch staging copy regardless of the live dir's
    state, and the removal pass must discover groups whose live dir
    vanished from the staging dirs themselves.
-2. The legacy shared `_ADOPTED_INDEX` marker is honored ONLY for
-   MinHash (the one index pre-round-9 sinks guarded) — it must not
-   waive the adoption check for the text/IVF/passage indexes a
-   composite sink guards under the same meta dir.
+2. Adoption markers are kind-scoped: a composite sink guards several
+   indexes under one meta dir, and adopting one must not waive the
+   adoption check for another.
 3. `train_ngram_lm` rebuilds are staged: a crash mid-rebuild leaves
    the committed model fully readable, and `last_epoch` carries across
    the rebuild so a replayed streaming epoch stays a no-op.
@@ -100,19 +99,16 @@ def test_remove_ids_recovers_deleted_live_dir(spark, tmp_path):
     assert not os.path.isdir(staging0)
 
 
-def test_legacy_adoption_marker_scoped_to_minhash(tmp_path):
-    """The shared legacy marker can only ever have meant a MinHash
-    adoption — it must not waive the composite sink's text/IVF/passage
-    checks (round-9 advisor)."""
+def test_adoption_marker_scoped_to_its_kind(tmp_path):
+    """Adopting one index kind records only that kind: the composite
+    sink's other indexes under the same meta dir keep their check."""
     meta = str(tmp_path / "meta")
     os.makedirs(meta)
-    with open(os.path.join(meta, "_ADOPTED_INDEX"), "w") as fh:
-        fh.write("-1")
-    sp._guard_index_adoption(meta, [-1, 0, 1], "MinHash")  # no raise
+    sp._guard_index_adoption(meta, [-1], "MinHash")  # adopts (all negative)
+    sp._guard_index_adoption(meta, [-1, 0, 1], "MinHash")  # now marked — no raise
     for kind in ("text", "IVF", "passage IVF"):
         with pytest.raises(RuntimeError, match="refusing to stream-fold"):
             sp._guard_index_adoption(meta, [-1, 0, 1], kind)
-    # a kind-scoped marker still waives its own kind
     sp._guard_index_adoption(meta, [-1], "text")  # adopts (all negative)
     sp._guard_index_adoption(meta, [-1, 0, 1], "text")  # now marked — no raise
 

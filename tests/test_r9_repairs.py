@@ -163,18 +163,18 @@ def test_staged_group_rewrite_recovers_from_partial_overwrite(spark, tmp_path):
     assert not os.path.isdir(staging2)
 
 
-def test_legacy_adoption_marker_honored(spark, tmp_path):
-    """Pre-round-9 adoptions were recorded under the shared
-    `_ADOPTED_INDEX` name; after the kind-scoping change an upgraded
-    deployment whose adopted index now (legitimately) carries
-    non-negative fold batches must not suddenly refuse."""
+def test_legacy_adoption_marker_waives_nothing(tmp_path):
+    """A leftover adoption marker under the old shared `_ADOPTED_INDEX`
+    name waives no kind's check: an index carrying non-negative batch
+    ids refuses with the compaction cure, exactly as in a fresh meta
+    dir."""
     meta = str(tmp_path / "meta")
     os.makedirs(meta)
     with open(os.path.join(meta, "_ADOPTED_INDEX"), "w") as fh:
         fh.write("-1")
-    # non-negative batches would refuse without an adoption record
-    sp._guard_index_adoption(meta, [-1, 0, 1, 2], "MinHash")  # no raise
-    # and a fresh meta dir still refuses them
+    for kind in ("MinHash", "text", "IVF", "passage IVF", "phash"):
+        with pytest.raises(RuntimeError, match="run the index's compaction first"):
+            sp._guard_index_adoption(meta, [-1, 0, 1, 2], kind)
     meta2 = str(tmp_path / "meta2")
     os.makedirs(meta2)
     with pytest.raises(RuntimeError, match="refusing to stream-fold"):

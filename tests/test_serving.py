@@ -152,9 +152,9 @@ def test_streaming_serving_sink_equals_batch_recompute(spark, sf_dir, tmp_path):
     assert tstream == want_tr
 
     # epoch guard: a re-delivered epoch is a no-op (restart idempotence)
-    assert sp._epoch_already_applied(base_stream, 0)
-    assert sp._epoch_already_applied(base_stream, 2)
-    assert not sp._epoch_already_applied(base_stream, 3)
+    assert sp._epoch_already_applied(base_stream, 0, str(tmp_path / "ck_serve"))
+    assert sp._epoch_already_applied(base_stream, 2, str(tmp_path / "ck_serve"))
+    assert not sp._epoch_already_applied(base_stream, 3, str(tmp_path / "ck_serve"))
     enriched.unpersist()
 
 

@@ -656,6 +656,79 @@ def test_epoch_marker_rejects_foreign_checkpoint(tmp_path):
     sp._record_epoch(base, 41, ck_a)
     assert sp._epoch_already_applied(base, 41, ck_a)
     assert not sp._epoch_already_applied(base, 42, ck_a)
-    assert sp._epoch_already_applied(base, 41)  # legacy probe, no identity
     with pytest.raises(RuntimeError, match="different|checkpoint"):
         sp._epoch_already_applied(base, 0, ck_b)
+
+
+def test_foreach_batch_sink_guard_apply_marker_maintenance_order(spark, tmp_path):
+    """The sink combinator's ordering contract on a real file stream:
+    replay guard, apply, epoch marker, then after_commit — so a replayed
+    or crashed-in-maintenance epoch is never applied twice, a foreign
+    checkpoint fails before apply, and a skipped empty batch leaves no
+    marker."""
+    feed, meta, ck = tmp_path / "feed", str(tmp_path / "meta"), str(tmp_path / "ck")
+    feed.mkdir()
+    applied = []
+
+    def start(checkpoint, meta_dir=meta, source=feed, **kw):
+        return sp._foreach_batch_sink(
+            spark.readStream.text(str(source)),
+            checkpoint,
+            lambda batch, epoch: applied.append(epoch),
+            meta_dir=meta_dir,
+            **kw,
+        )
+
+    def drain(q):
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def last_epoch(meta_dir=meta):
+        with open(os.path.join(meta_dir, "_LAST_EPOCH")) as fh:
+            return int(fh.read().splitlines()[0])
+
+    # maintenance that crashes once: the epoch is already recorded, and
+    # the restart that re-delivers it applies nothing
+    crashes = [RuntimeError("maintenance crashed")]
+
+    def flaky(batch, epoch):
+        if crashes:
+            raise crashes.pop()
+
+    (feed / "a.txt").write_text("a\n")
+    with pytest.raises(Exception, match="maintenance crashed"):
+        drain(start(ck, after_commit=flaky))
+    assert applied == [0] and last_epoch() == 0
+    drain(start(ck, after_commit=flaky))
+    assert applied == [0] and last_epoch() == 0
+
+    # a clean restart replay of a recorded epoch: drop the checkpoint's
+    # commit so Spark re-runs epoch 1 — the guard skips it
+    (feed / "b.txt").write_text("b\n")
+    drain(start(ck))
+    assert applied == [0, 1] and last_epoch() == 1
+    for name in ("1", ".1.crc"):
+        path = os.path.join(ck, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    drain(start(ck))
+    assert applied == [0, 1] and last_epoch() == 1
+
+    # a foreign checkpoint against the existing marker fails before apply
+    with pytest.raises(Exception, match="comparable within one checkpoint"):
+        drain(start(str(tmp_path / "ck_other")))
+    assert applied == [0, 1]
+
+    # an empty batch on an empty-skipping sink: no apply, no marker
+    empty_feed, empty_meta = tmp_path / "empty_feed", str(tmp_path / "empty_meta")
+    empty_feed.mkdir()
+    (empty_feed / "e.txt").write_text("")
+    q = start(
+        str(tmp_path / "ck_empty"), meta_dir=empty_meta, source=empty_feed, skip_empty=True
+    )
+    drain(q)
+    assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] == 0][:1] == [0]
+    assert applied == [0, 1]
+    assert not os.path.exists(os.path.join(empty_meta, "_LAST_EPOCH"))
