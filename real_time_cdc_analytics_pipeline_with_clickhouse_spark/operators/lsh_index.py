@@ -117,7 +117,7 @@ artifacts keep working unpruned, folds match the existing layout, and
 the first compaction upgrades the whole tree atomically (stage + swap,
 per table).
 
-Streaming form: ``streaming/pipeline.start_corpus_ingest_sink``
+Streaming form: ``streaming/pipeline.start_document_ingest_sink``
 (``op_col=`` enables the CDC routing).
 """
 

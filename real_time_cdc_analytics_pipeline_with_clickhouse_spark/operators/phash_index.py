@@ -63,7 +63,7 @@ of create/re-encode/delete/re-create folded through
 ``upsert_phash_index`` answers dedup exactly like a fresh index built
 on the net final corpus.
 
-Streaming form: ``streaming/pipeline.start_asset_ingest_sink``
+Streaming form: ``streaming/pipeline.start_media_ingest_sink``
 (``op_col=`` enables the CDC routing).
 """
 

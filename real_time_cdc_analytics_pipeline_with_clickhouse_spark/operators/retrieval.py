@@ -275,8 +275,8 @@ def update_text_index(
     dir is named by it (deterministic tokenization ⇒ a replay
     rewrites identical bytes) and the manifest's ``last_epoch`` stamp
     makes a replayed stats fold a no-op — exactly-once through every
-    crash window.  Callers dedup doc_ids upstream (the corpus-ingest
-    sinks do).  ``checkpoint`` is the single-writer token
+    crash window.  Callers dedup doc_ids upstream (the document ingest
+    sink does).  ``checkpoint`` is the single-writer token
     (operators/ownership.py): a fold from a foreign checkpoint, or an
     unattributed manual fold against a sink-owned index, refuses
     loudly before touching any data."""

@@ -283,10 +283,12 @@ def test_banding_guards_refuse_unservable_radius(spark, sf_dir):
 def test_streaming_asset_index_sink_finds_planted_duplicates(
     spark, sf_dir, tmp_path
 ):
-    """Asset stream → decode/embed → persistent IVF index: the sink-
-    built index equals a build+frozen-fold of the same embedded
-    assets, planted duplicate assets are findable from it, and a
-    crash-window replay of an epoch changes nothing."""
+    """Asset stream → decode/embed → persistent IVF index (the media
+    ingest sink's IVF leg): the sink-built index holds exactly the
+    corpus survivors' nonzero embeddings, planted duplicate assets —
+    including copies split across micro-batches — die at the phash
+    gate before they reach it, and a crash-window replay of an epoch
+    changes nothing."""
     import os
 
     from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import (
@@ -309,21 +311,46 @@ def test_streaming_asset_index_sink_finds_planted_duplicates(
     for i, p in enumerate(parts):
         p.coalesce(1).write.mode("overwrite").parquet(f"{feed}/f{i}.parquet")
     idx = str(tmp_path / "asset_ivf_stream")
+    corpus = str(tmp_path / "asset_corpus")
+    ck = str(tmp_path / "ck_assets")
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q = sp.start_asset_embedding_index_sink(
-        stream, idx, str(tmp_path / "ck_assets"), n_centroids=4
+    q = sp.start_media_ingest_sink(
+        stream, corpus, str(tmp_path / "phash"), idx, ck, n_centroids=4
     )
     q.processAllAvailable()
     q.stop()
 
-    emb = asset_embed.embed_assets(assets).where(
-        F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + F.abs(x)) > 0
-    )
+    kept_ids = {
+        r.asset_id for r in spark.read.parquet(corpus).select("asset_id").collect()
+    }
+
+    def nonzero(df):
+        return asset_embed.embed_assets(df).where(
+            F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + F.abs(x)) > 0
+        ).select("vec_id", "embedding")
+
+    emb = nonzero(assets.where(F.col("asset_id").isin(sorted(kept_ids))))
     assert ivf_index.read_manifest(idx)["n_rows"] == emb.count()
+    indexed = {
+        r.vec_id
+        for r in spark.read.parquet(f"{idx}/assignments").select("vec_id").collect()
+    }
+    assert indexed == {r.vec_id for r in emb.select("vec_id").collect()}
+
+    ids = {r.asset_id for r in assets.select("asset_id").collect()}
+    planted = {(a, a + 100_000) for a in ids if a + 100_000 in ids}
+    assert planted
+    # an exact copy arriving in a later micro-batch than its original
+    # still meets it at the persistent phash index — the cross-batch
+    # property it buys — so it never reaches the corpus or the vector
+    # index
+    later = {b for a, b in planted if a % 3 < b % 3}
+    assert later
+    assert not later & (kept_ids | indexed)
 
     pairs = {
         (r.vec_a, r.vec_b)
@@ -331,26 +358,13 @@ def test_streaming_asset_index_sink_finds_planted_duplicates(
             spark, idx, threshold=0.9999
         ).collect()
     }
-    ids = {r.asset_id for r in assets.select("asset_id").collect()}
-    planted = {(a, a + 100_000) for a in ids if a + 100_000 in ids}
-    assert planted
-    # an exact-copy pair split across micro-batches still meets in the
-    # index — the cross-batch property the persistent artifact buys
-    cross_batch = {(a, b) for a, b in planted if a % 3 != b % 3}
-    assert cross_batch
-    assert planted <= pairs, planted - pairs
-
     # crash-window replay of epoch 1: deterministic embed → identical
     # batch dir bytes, count and pairs unchanged
     n_before = ivf_index.read_manifest(idx)["n_rows"]
-    e1 = asset_embed.embed_assets(parts[1]).where(
-        F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + F.abs(x)) > 0
-    ).select("vec_id", "embedding")
+    e1 = nonzero(parts[1].where(F.col("asset_id").isin(sorted(kept_ids))))
     # the replay acts on the sink's behalf → carries its checkpoint
     # (round-10 single-writer contract, tests/test_ownership.py)
-    ivf_index.update_ivf_index(
-        e1, idx, epoch=1, checkpoint=str(tmp_path / "ck_assets")
-    )
+    ivf_index.update_ivf_index(e1, idx, epoch=1, checkpoint=ck)
     assert ivf_index.read_manifest(idx)["n_rows"] == n_before
     again = {
         (r.vec_a, r.vec_b)

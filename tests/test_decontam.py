@@ -223,8 +223,9 @@ def test_corpus_ingest_sink_benchmark_gate(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus_dir, idx, str(tmp_path / "ck"), benchmark_index_dir=bidx
+    q = sp.start_document_ingest_sink(
+        stream, corpus_dir, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck"), benchmark_index_dir=bidx, n_centroids=2,
     )
     for i, b in enumerate([b1, b2, b3]):
         b.coalesce(1).write.mode("overwrite").parquet(f"{feed}/f{i}.parquet")
@@ -410,8 +411,9 @@ def test_ngram_artifact_and_streaming_excision(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus_dir, idx, str(tmp_path / "xck"), benchmark_ngram_dir=gdir
+    q = sp.start_document_ingest_sink(
+        stream, corpus_dir, idx, str(tmp_path / "xtix"), str(tmp_path / "xivf"),
+        str(tmp_path / "xck"), benchmark_ngram_dir=gdir, n_centroids=2,
     )
     q.processAllAvailable()
     q.stop()
@@ -523,9 +525,10 @@ def test_ingest_sink_composes_excision_and_fuzzy_gate(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus_dir, idx, str(tmp_path / "bothck"),
-        benchmark_index_dir=bidx, benchmark_ngram_dir=gdir,
+    q = sp.start_document_ingest_sink(
+        stream, corpus_dir, idx, str(tmp_path / "bothtix"), str(tmp_path / "bothivf"),
+        str(tmp_path / "bothck"), benchmark_index_dir=bidx, benchmark_ngram_dir=gdir,
+        n_centroids=2,
     )
     q.processAllAvailable()
     q.stop()

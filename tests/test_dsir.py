@@ -423,7 +423,7 @@ def test_validation_and_plan_shape(spark, sf_dir):
 def test_live_ingest_maintains_model_and_selection_equals_batch(
     spark, sf_dir, tmp_path
 ):
-    """r6 verdict #6 composition: the corpus-ingest sink (fuzzy dedup
+    """r6 verdict #6 composition: the document ingest sink (fuzzy dedup
     gates) keeps a live DSIR model in lockstep with the SURVIVORS via
     ``dsir_model_dir`` — after the stream, a selection drawn from the
     streamed model over the accumulated corpus must equal (doc for
@@ -462,8 +462,9 @@ def test_live_ingest_maintains_model_and_selection_equals_batch(
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus_dir, idx_dir, ck, dsir_model_dir=model_dir
+    q = sp.start_document_ingest_sink(
+        stream, corpus_dir, idx_dir, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        ck, dsir_model_dir=model_dir,
     )
     q.processAllAvailable()
     b2.coalesce(1).write.mode("overwrite").parquet(f"{feed}/f1.parquet")

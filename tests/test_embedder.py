@@ -123,11 +123,11 @@ def test_embed_to_ivf_index_semantic_dedup_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_streaming_document_index_sink(spark, sf_dir, tmp_path):
-    """Docs stream → embed → persistent IVF index: the sink-built
-    index answers identically to build-on-first-batch + frozen-fold
-    of the SAME embedded corpus, planted duplicates are findable from
-    the index, and a crash-window replay of an epoch changes
-    nothing."""
+    """Docs stream → embed → persistent IVF index (the document ingest
+    sink's IVF leg): the sink-built index answers identically to
+    build-on-first-batch + frozen-fold of the SAME embedded corpus,
+    planted duplicates never reach it (the index follows the deduped
+    corpus), and a crash-window replay of an epoch changes nothing."""
     import os
 
     from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import (
@@ -147,18 +147,24 @@ def test_streaming_document_index_sink(spark, sf_dir, tmp_path):
             "overwrite"
         ).parquet(f"{feed}/f{i}.parquet")
     idx = str(tmp_path / "doc_ivf")
+    corpus = str(tmp_path / "corpus")
+    ck = str(tmp_path / "ck_demb")
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q = sp.start_document_embedding_index_sink(
-        stream, idx, str(tmp_path / "ck_demb"), dim=DIM, n_centroids=4
+    q = sp.start_document_ingest_sink(
+        stream, corpus, str(tmp_path / "mh"), str(tmp_path / "tix"), idx, ck,
+        dim=DIM, n_centroids=4,
     )
     q.processAllAvailable()
     q.stop()
 
-    emb = embedder.embed_documents(docs, dim=DIM).where(F.col("n_tokens") > 0)
+    kept = docs.join(
+        spark.read.parquet(corpus).select("doc_id"), "doc_id", "left_semi"
+    )
+    emb = embedder.embed_documents(kept, dim=DIM).where(F.col("n_tokens") > 0)
     assert ivf_index.read_manifest(idx)["n_rows"] == emb.count()
     # stored assignments ≡ frozen-centroid assignment of the full
     # embedded corpus under the sink's own centroids
@@ -176,24 +182,24 @@ def test_streaming_document_index_sink(spark, sf_dir, tmp_path):
         .collect()
     }
     assert got == want
-    # planted duplicate pairs visible straight off the live index
+    # a planted copy that arrives in a later micro-batch than its
+    # original dies at the dedup gate, so it is never indexed
+    ids = {r.doc_id for r in docs.select("doc_id").collect()}
+    later = {d + 100_000 for d in ids if d % 3 < (d + 100_000) % 3 and d + 100_000 in ids}
+    assert later and not later & {v for v, _ in got}
     pairs = {
         (r.vec_a, r.vec_b)
         for r in ivf_index.near_dup_pairs_from_index(
             spark, idx, threshold=0.9999
         ).collect()
     }
-    ids = {r.doc_id for r in docs.select("doc_id").collect()}
-    planted = {(d, d + 100_000) for d in ids if d < 100_000 and d + 100_000 in ids}
-    assert planted and planted <= pairs
     # crash-window replay of epoch 2: deterministic embed → identical
     # batch dir, answers unchanged
-    b2 = docs.where(F.col("doc_id") % 3 == 2)
+    b2 = kept.where(F.col("doc_id") % 3 == 2)
     emb2 = embedder.embed_documents(b2, dim=DIM).where(F.col("n_tokens") > 0)
     # the replay acts on the sink's behalf → carries its checkpoint
     ivf_index.update_ivf_index(
-        emb2.select("vec_id", "embedding"), idx, epoch=2,
-        checkpoint=str(tmp_path / "ck_demb"),
+        emb2.select("vec_id", "embedding"), idx, epoch=2, checkpoint=ck,
     )
     assert ivf_index.read_manifest(idx)["n_rows"] == emb.count()
     again = {

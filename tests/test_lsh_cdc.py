@@ -2,7 +2,7 @@
 the four stored artifacts to gain it: a 3-batch Debezium-style
 document history (create / update / delete / re-create, latest-wins
 within a batch via seq) folded through
-``start_corpus_ingest_sink(op_col=...)`` must dedup EXACTLY like a
+``start_document_ingest_sink(op_col=...)`` must dedup EXACTLY like a
 fresh index built on the net final document table; both operator-level
 crash windows of ``upsert_minhash_index`` must replay to the same
 state; the pre-lineage flat layout must refuse loudly and migrate by
@@ -115,9 +115,9 @@ def test_cdc_maintained_minhash_index_equals_fresh_build(spark, sf_dir, tmp_path
         .option("maxFilesPerTrigger", "1")
         .parquet(feed + "/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus, idx, str(tmp_path / "ck"), op_col="op", seq_col="seq",
-        compact_every=None,
+    q = sp.start_document_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck"), op_col="op", seq_col="seq", compact_every=None,
     )
     q.processAllAvailable()
     q.stop()
@@ -343,7 +343,7 @@ def test_refresh_from_diff_needs_no_compaction(spark, sf_dir, tmp_path):
 
 
 def test_corpus_sink_refuses_offline_index_until_compaction(spark, sf_dir, tmp_path):
-    """The round-7 ADVICE guard, extended to the corpus ingest sink: an
+    """The round-7 ADVICE guard, extended to the document ingest sink: an
     index carrying self-allocated non-negative batch ids would have
     its batch=<epoch> dirs clobbered by the stream — refuse; after
     compaction (reserved negative range) it adopts and folds."""
@@ -367,7 +367,10 @@ def test_corpus_sink_refuses_offline_index_until_compaction(spark, sf_dir, tmp_p
         .parquet(feed + "/*.parquet")
     )
     corpus = str(tmp_path / "corpus")
-    q = sp.start_corpus_ingest_sink(stream, corpus, idx, str(tmp_path / "ck1"))
+    q = sp.start_document_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck1"), n_centroids=4,
+    )
     with pytest.raises(Exception, match="refusing to stream-fold"):
         q.processAllAvailable()
     q.stop()
@@ -380,7 +383,10 @@ def test_corpus_sink_refuses_offline_index_until_compaction(spark, sf_dir, tmp_p
         .option("maxFilesPerTrigger", "1")
         .parquet(feed + "/*.parquet")
     )
-    q2 = sp.start_corpus_ingest_sink(stream2, corpus, idx, str(tmp_path / "ck2"))
+    q2 = sp.start_document_ingest_sink(
+        stream2, corpus, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck2"), n_centroids=4,
+    )
     q2.processAllAvailable()
     q2.stop()
     assert before < _live_band_set(spark, idx)  # the batch folded in
@@ -395,10 +401,12 @@ def test_cdc_mode_refuses_live_dsir_fold(spark, tmp_path):
         spark.readStream.format("rate").option("rowsPerSecond", "1").load()
     )
     with pytest.raises(ValueError, match="additive"):
-        sp.start_corpus_ingest_sink(
+        sp.start_document_ingest_sink(
             stream.selectExpr("value as doc_id", "'x' as text", "'c' as op"),
             str(tmp_path / "c"),
             str(tmp_path / "i"),
+            str(tmp_path / "tix"),
+            str(tmp_path / "ivf"),
             str(tmp_path / "ck"),
             op_col="op",
             dsir_model_dir=str(tmp_path / "m"),
@@ -437,10 +445,10 @@ def test_cdc_update_to_contaminated_content_evicts_doc(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(feed + "/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus, idx, str(tmp_path / "ck"),
-        benchmark_index_dir=bidx, op_col="op", seq_col="seq",
-        compact_every=None,
+    q = sp.start_document_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck"), benchmark_index_dir=bidx, op_col="op",
+        seq_col="seq", compact_every=None, n_centroids=4,
     )
     q.processAllAvailable()
     q.stop()

@@ -94,7 +94,10 @@ def test_streaming_corpus_ingest_dedups_across_batches(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed_dir}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(stream, corpus_dir, idx_dir, str(tmp_path / "ckpt"))
+    q = sp.start_document_ingest_sink(
+        stream, corpus_dir, idx_dir, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ckpt"),
+    )
     q.processAllAvailable()
     b2.coalesce(1).write.mode("overwrite").parquet(f"{feed_dir}/f1.parquet")
     q.processAllAvailable()
@@ -164,7 +167,9 @@ def test_ingest_compaction_bounds_files_and_preserves_results(spark, sf_dir, tmp
             .option("maxFilesPerTrigger", "1")
             .parquet(f"{feed}/*.parquet")
         )
-        q = sp.start_corpus_ingest_sink(stream, corpus, idx, ck, compact_every=compact_every)
+        q = sp.start_document_ingest_sink(
+            stream, corpus, idx, idx + "_tix", idx + "_ivf", ck, compact_every=compact_every
+        )
         q.processAllAvailable()
         q.stop()
 

@@ -174,9 +174,9 @@ def test_manual_only_artifacts_stay_free(spark, sf_dir, tmp_path):
 
 
 def test_sink_bootstrap_claims_ownership(spark, sf_dir, tmp_path):
-    """A text-index sink's bootstrap build stamps the manifest in the
-    same epoch, so a manual fold cannot slip in before the first
-    streamed update."""
+    """The document ingest sink's text-index bootstrap build stamps the
+    manifest in the same epoch, so a manual fold cannot slip in before
+    the first streamed update."""
     from real_time_cdc_analytics_pipeline_with_clickhouse_spark.streaming import (
         pipeline as sp,
     )
@@ -193,7 +193,10 @@ def test_sink_bootstrap_claims_ownership(spark, sf_dir, tmp_path):
     )
     d = str(tmp_path / "tix")
     ck = str(tmp_path / "ck")
-    q = sp.start_text_index_sink(stream, d, ck)
+    q = sp.start_document_ingest_sink(
+        stream, str(tmp_path / "corpus"), str(tmp_path / "mh"), d,
+        str(tmp_path / "ivf"), ck,
+    )
     q.processAllAvailable()
     q.stop()
     assert retrieval.read_text_index_manifest(d)[

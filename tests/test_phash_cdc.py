@@ -2,14 +2,15 @@
 the media twin of ``test_ivf_index.test_cdc_maintained_ivf_index_
 equals_fresh_build``: a 3-batch Debezium-style asset history
 (create / re-encode / delete / re-create, latest-wins within a batch
-via seq) folded through ``start_asset_ingest_sink(op_col=...)`` must
+via seq) folded through ``start_media_ingest_sink(op_col=...)`` must
 dedup EXACTLY like a fresh index built on the net final asset table,
-and both operator-level crash windows of ``upsert_phash_index`` must
-replay to the same state.  Plus the round-7 ADVICE guard: a stream
-must refuse to fold into an index it didn't build when the index
-carries non-negative batch ids its epochs would clobber (one
-compaction rewrites them into the reserved negative range and the
-stream then adopts it)."""
+keep its asset IVF index equal to the corpus's nonzero embeddings
+after every epoch, and replay both crash windows — at the sink and in
+``upsert_phash_index`` — to the same state.  Plus the round-7 ADVICE
+guard: a stream must refuse to fold into an index it didn't build
+when the index carries non-negative batch ids its epochs would
+clobber (one compaction rewrites them into the reserved negative range
+and the stream then adopts it)."""
 
 from __future__ import annotations
 
@@ -99,22 +100,80 @@ def test_cdc_maintained_phash_index_equals_fresh_build(spark, sf_dir, tmp_path):
 
     feed = str(tmp_path / "cdcfeed")
     os.makedirs(feed)
-    for i, b in enumerate((b0, b1, b2)):
-        spark.createDataFrame(b, CDC_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{feed}/f{i}.parquet")
     corpus, idx = str(tmp_path / "corpus"), str(tmp_path / "pidx_cdc")
-    stream = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed + "/*.parquet")
-    )
-    q = sp.start_asset_ingest_sink(
-        stream, corpus, idx, str(tmp_path / "ck"), op_col="op", seq_col="seq",
-        compact_every=None,
-    )
-    q.processAllAvailable()
-    q.stop()
+    vidx, ck = str(tmp_path / "aivf_cdc"), str(tmp_path / "ck")
+
+    def run_epoch(i=None, b=None):
+        if b is not None:
+            spark.createDataFrame(b, CDC_SCHEMA).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(f"{feed}/f{i}.parquet")
+        stream = (
+            spark.readStream.schema(CDC_SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(feed + "/*.parquet")
+        )
+        q = sp.start_media_ingest_sink(
+            stream, corpus, idx, vidx, ck, op_col="op", seq_col="seq",
+            compact_every=None, n_centroids=4,
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+
+    def last_epoch():
+        with open(os.path.join(corpus + "_meta", "_LAST_EPOCH")) as fh:
+            return int(fh.read().splitlines()[0])
+
+    def ivf_live_ids():
+        return {
+            r.vec_id
+            for r in ivf_index._live_assignments(spark, vidx).select("vec_id").collect()
+        }
+
+    def assert_ivf_mirrors_corpus():
+        kept = spark.read.parquet(corpus).select(*ASSET_COLS)
+        nonzero = {
+            r.vec_id
+            for r in asset_embed.embed_assets(kept)
+            .where(
+                F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + F.abs(x))
+                > 0
+            )
+            .select("vec_id")
+            .collect()
+        }
+        assert ivf_live_ids() == nonzero and nonzero
+
+    run_epoch(0, b0)
+    assert last_epoch() == 0
+    assert_ivf_mirrors_corpus()
+
+    # crash window B at the sink: epoch 1 dies in its phash fold after
+    # its tombstones committed (the IVF leg may have committed too);
+    # the restart replays the epoch from the same checkpoint
+    real_update = phash_index.update_phash_index
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash before the phash fold")
+
+    phash_index.update_phash_index = crash
+    try:
+        with pytest.raises(Exception, match="injected crash"):
+            run_epoch(1, b1)
+    finally:
+        phash_index.update_phash_index = real_update
+    assert last_epoch() == 0
+    live_ids = {a for a, _, _ in _live_fp_set(spark, idx)}
+    assert not {r["asset_id"] for r in upd1} & live_ids  # tombstoned, not refolded
+    run_epoch()
+    assert last_epoch() == 1
+    assert_ivf_mirrors_corpus()
+
+    run_epoch(2, b2)
+    assert last_epoch() == 2
+    assert_ivf_mirrors_corpus()
 
     # the net final table: latest surviving version per asset_id
     final = {r["asset_id"]: _content(r) for r in base}
@@ -171,8 +230,31 @@ def test_cdc_maintained_phash_index_equals_fresh_build(spark, sf_dir, tmp_path):
     corpus_fps = _fp_of(spark, corpus_df.select(*ASSET_COLS))
     assert corpus_fps <= _fp_of(spark, net)
 
-    # crash window A: a fully-committed epoch replays as a no-op (the
-    # manifest's last_epoch stamp is checked before the delete)
+    # crash window A at the sink: epoch 2 fully committed, its marker
+    # not — roll the marker back and drop the checkpoint's commit, so
+    # the restart re-runs epoch 2 through the whole fold; every
+    # artifact must come out unchanged
+    state = (_live_fp_set(spark, idx), ivf_live_ids(), corpus_fps, corpus_ids)
+    with open(os.path.join(corpus + "_meta", "_LAST_EPOCH"), "w") as fh:
+        fh.write(f"1\n{os.path.abspath(ck)}")
+    for name in ("2", ".2.crc"):
+        path = os.path.join(ck, "commits", name)
+        if os.path.exists(path):
+            os.remove(path)
+    run_epoch()
+    assert last_epoch() == 2
+    corpus_df = spark.read.parquet(corpus)
+    assert state == (
+        _live_fp_set(spark, idx),
+        ivf_live_ids(),
+        _fp_of(spark, corpus_df.select(*ASSET_COLS)),
+        {r.asset_id for r in corpus_df.select("asset_id").collect()},
+    )
+    assert_ivf_mirrors_corpus()
+
+    # crash window A in the operator: a fully-committed epoch replays
+    # as a no-op (the manifest's last_epoch stamp is checked before the
+    # delete)
     before = _live_fp_set(spark, idx)
     ups1 = spark.createDataFrame(
         [t for t in b1 if t[-2] != "d"], CDC_SCHEMA
@@ -237,7 +319,9 @@ def test_asset_sink_refuses_offline_index_until_compaction(
         .parquet(feed + "/*.parquet")
     )
     corpus = str(tmp_path / "corpus")
-    q = sp.start_asset_ingest_sink(stream, corpus, idx, str(tmp_path / "ck1"))
+    q = sp.start_media_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "aivf"), str(tmp_path / "ck1")
+    )
     with pytest.raises(Exception, match="refusing to stream-fold"):
         q.processAllAvailable()
     q.stop()
@@ -250,7 +334,10 @@ def test_asset_sink_refuses_offline_index_until_compaction(
         .option("maxFilesPerTrigger", "1")
         .parquet(feed + "/*.parquet")
     )
-    q2 = sp.start_asset_ingest_sink(stream2, corpus, idx, str(tmp_path / "ck2"))
+    q2 = sp.start_media_ingest_sink(
+        stream2, corpus, idx, str(tmp_path / "aivf"), str(tmp_path / "ck2"),
+        n_centroids=4,
+    )
     q2.processAllAvailable()
     q2.stop()
     after = _live_fp_set(spark, idx)

@@ -1,5 +1,5 @@
 """Incremental perceptual-hash dedup index (operators/phash_index.py)
-and the streaming asset-ingest sink: incremental survivors must equal
+and the streaming media ingest sink: incremental survivors must equal
 the global greedy pairwise rule computed by an independent numpy
 union scan, takedowns must lift precedent immediately, and compaction
 must change bytes, never answers."""
@@ -187,8 +187,9 @@ def test_streaming_asset_ingest_sink_dedups_across_batches(
         .parquet(f"{feed}/*.parquet")
     )
     b1.coalesce(1).write.mode("overwrite").parquet(f"{feed}/f0.parquet")
-    q = sp.start_asset_ingest_sink(
-        stream, corpus, idx, str(tmp_path / "ck"), compact_every=2
+    q = sp.start_media_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "aivf"), str(tmp_path / "ck"),
+        compact_every=2,
     )
     q.processAllAvailable()
     b2.coalesce(1).write.mode("overwrite").parquet(f"{feed}/f1.parquet")

@@ -2,13 +2,18 @@
 
 from __future__ import annotations
 
+import re
+
 import pyspark.sql.functions as F
 
 import __spark_entry__ as entrymod
+from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import cdc, enrich
+from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import rollups as RU
 from real_time_cdc_analytics_pipeline_with_clickhouse_spark.plans.explain import (
     assert_broadcast_join,
     plan_string,
 )
+from real_time_cdc_analytics_pipeline_with_clickhouse_spark.sources import cdc_feed
 from real_time_cdc_analytics_pipeline_with_clickhouse_spark.tables import load_table
 
 QUERIES = entrymod.queries()
@@ -129,3 +134,70 @@ def test_repeated_passages_shuffles_on_digest_only(spark, sf_dir):
     plan = plan_string(corpus.repeated_passages(load_table(spark, sf_dir, "documents")))
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "passage_md5" in plan
+
+
+# Single-evaluation CDC parse pins.  The CDC parse speedup rests on
+# ``cdc._pin`` — Catalyst treating ``shuffle()`` of a one-element array
+# as nondeterministic and never constant-folding it.  A Spark upgrade
+# that folds it would silently reintroduce the up-to-8× duplicated
+# envelope parse.  These tests make that regression LOUD: the physical
+# plan of each unwrap must evaluate ``from_json`` exactly once, and the
+# null-id filter must sit above the feed's exchange (never substituted
+# down onto the scan).
+
+
+def _from_json_count(plan: str) -> int:
+    return len(re.findall(r"from_json", plan))
+
+
+def test_unwrap_engagement_single_parse(spark, sf_dir):
+    feed = cdc_feed.engagement_cdc_json(load_table(spark, sf_dir, "events"))
+    plan = plan_string(cdc.unwrap_engagement(feed))
+    assert _from_json_count(plan) == 1, (
+        "from_json must appear exactly once — the _pin stopped working "
+        "(optimizer substituted the parse chain into a consumer):\n" + plan
+    )
+
+
+def test_unwrap_content_single_parse(spark, sf_dir):
+    feed = cdc_feed.content_cdc_json(load_table(spark, sf_dir, "part"))
+    plan = plan_string(cdc.unwrap_content(feed))
+    assert _from_json_count(plan) == 1, plan
+
+
+def test_null_id_filter_stays_above_exchange(spark, sf_dir):
+    """The unwrap's null-id filter may not be pushed below the feed's
+    repartition exchange: in the formatted plan (printed root-first)
+    the Filter node must precede the Exchange, and the scan node must
+    carry no parse chain in its data filters."""
+    feed = cdc_feed.engagement_cdc_json(load_table(spark, sf_dir, "events"))
+    plan = plan_string(cdc.unwrap_engagement(feed))
+    lines = plan.splitlines()
+    filter_idx = next(
+        i for i, l in enumerate(lines) if re.match(r"\s*[+:*\-| ]*\(?\d*\)?\s*.*Filter", l)
+    )
+    exchange_idx = next(i for i, l in enumerate(lines) if "Exchange" in l)
+    assert filter_idx < exchange_idx, (
+        "null-id Filter was pushed below the feed's Exchange:\n" + plan
+    )
+    # the scan's pushed/data filters must not contain the parse chain
+    for m in re.finditer(r"(DataFilters|PushedFilters): \[(.*?)\]", plan):
+        assert "from_json" not in m.group(2), plan
+
+
+def test_full_rollup_slice_single_parse_per_feed(spark, sf_dir):
+    """End-to-end slice (parse → enrich → rollup): one from_json per
+    feed (engagement + content = 2 total) — the hourly_rollup shape
+    ``bench.py`` times."""
+    ev = load_table(spark, sf_dir, "events")
+    part = load_table(spark, sf_dir, "part")
+    dim = enrich.compact_dim_latest(cdc.unwrap_content(cdc_feed.content_cdc_json(part)))
+    df = RU.hourly_rollup(
+        enrich.enrich_events(
+            cdc.unwrap_engagement(cdc_feed.engagement_cdc_json(ev)), dim
+        )
+    )
+    plan = plan_string(df)
+    assert _from_json_count(plan) <= 2, (
+        f"expected ≤2 from_json (one per feed), got {_from_json_count(plan)}:\n" + plan
+    )

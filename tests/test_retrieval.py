@@ -9,7 +9,7 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import retrieval
+from real_time_cdc_analytics_pipeline_with_clickhouse_spark.operators import dedup, retrieval
 from real_time_cdc_analytics_pipeline_with_clickhouse_spark.plans.explain import plan_string
 from real_time_cdc_analytics_pipeline_with_clickhouse_spark.tables import load_table
 
@@ -22,6 +22,24 @@ TERMS = ["spark", "vector", "window"]
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _without_near_dups(docs):
+    """``docs`` minus every doc with a ≥0.5-Jaccard partner among them:
+    the document ingest sink's dedup gate then keeps them all, so the
+    text index it maintains must equal a plain build over the same
+    docs."""
+    pairs = dedup.ngram_jaccard_pairs(docs, threshold=0.5).collect()
+    paired = {r.doc_a for r in pairs} | {r.doc_b for r in pairs}
+    return docs.where(~F.col("doc_id").isin(sorted(paired) or [-1]))
+
+
+def _start_ingest(sp, stream, tix, **kw):
+    """The document ingest sink with its text index at ``tix`` (the
+    corpus, MinHash and IVF artifacts beside it)."""
+    return sp.start_document_ingest_sink(
+        stream, tix + "_corpus", tix + "_mh", tix, tix + "_ivf", tix + "_ck", **kw
+    )
 
 
 def test_index_backed_bm25_equals_direct(spark, sf_dir, tmp_path):
@@ -75,17 +93,18 @@ def test_missing_index_fails_loudly(spark, tmp_path):
 
 
 def test_streaming_text_index_sink_equals_one_shot_build(spark, sf_dir, tmp_path):
-    """First micro-batch builds, later batches fold map-side; the
-    sink-built index must answer exactly like a one-shot build over
-    the full corpus, manifest stats must agree, and a replayed epoch
-    must be a no-op (the manifest last_epoch stamp)."""
+    """First micro-batch builds, later batches fold map-side (the
+    document ingest sink's text-index leg); the sink-built index must
+    answer exactly like a one-shot build over the full corpus, manifest
+    stats must agree, and a replayed epoch must be a no-op (the
+    manifest last_epoch stamp)."""
     import os
 
     from real_time_cdc_analytics_pipeline_with_clickhouse_spark.streaming import (
         pipeline as sp,
     )
 
-    docs = load_table(spark, sf_dir, "documents").persist()
+    docs = _without_near_dups(load_table(spark, sf_dir, "documents")).persist()
     feed = str(tmp_path / "docs_feed")
     os.makedirs(feed)
     for i in range(3):
@@ -99,12 +118,12 @@ def test_streaming_text_index_sink_equals_one_shot_build(spark, sf_dir, tmp_path
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*")
     )
-    q = sp.start_text_index_sink(stream, idx, str(tmp_path / "ck_tix"), buckets=16)
+    q = _start_ingest(sp, stream, idx)
     q.processAllAvailable()
     q.stop()
 
     idx_full = str(tmp_path / "tix_oneshot")
-    retrieval.build_text_index(docs, idx_full, buckets=16)
+    retrieval.build_text_index(docs, idx_full)
     got = retrieval.bm25_topk_from_index(spark, idx, TERMS, k=25)
     want = retrieval.bm25_topk_from_index(spark, idx_full, TERMS, k=25)
     assert _rows(got) == _rows(want) and _rows(got)
@@ -116,7 +135,7 @@ def test_streaming_text_index_sink_equals_one_shot_build(spark, sf_dir, tmp_path
 
     # replayed epoch: the manifest stamp short-circuits the fold
     last_batch = docs.where(F.col("doc_id") % 3 == 2)
-    retrieval.update_text_index(last_batch, idx, epoch=2)
+    retrieval.update_text_index(last_batch, idx, epoch=2, checkpoint=idx + "_ck")
     ms2 = retrieval.read_text_index_manifest(idx)
     assert ms2 == ms
     assert _rows(retrieval.bm25_topk_from_index(spark, idx, TERMS, k=25)) == _rows(want)
@@ -136,7 +155,7 @@ def test_text_index_compaction_bounds_files_and_preserves_results(
         pipeline as sp,
     )
 
-    docs = load_table(spark, sf_dir, "documents").persist()
+    docs = _without_near_dups(load_table(spark, sf_dir, "documents")).persist()
     feed = str(tmp_path / "cfeed")
     os.makedirs(feed)
     for i in range(6):
@@ -150,13 +169,7 @@ def test_text_index_compaction_bounds_files_and_preserves_results(
             .option("maxFilesPerTrigger", 1)
             .parquet(feed + "/*")
         )
-        q = sp.start_text_index_sink(
-            stream,
-            idx,
-            idx + "_ck",
-            buckets=16,
-            compact_every=compact_every,
-        )
+        q = _start_ingest(sp, stream, idx, compact_every=compact_every)
         q.processAllAvailable()
         q.stop()
 
@@ -440,7 +453,9 @@ def test_cdc_maintained_text_index_sink(spark, sf_dir, tmp_path):
         pipeline as sp,
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text").persist()
+    docs = _without_near_dups(
+        load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 70)
+    ).select("doc_id", "text").persist()
     base = docs.where(F.col("doc_id") < 60)
     b1 = base.withColumn("op", F.lit("c"))
     b2 = (
@@ -473,9 +488,7 @@ def test_cdc_maintained_text_index_sink(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q_ = sp.start_text_index_sink(
-        stream, idx, str(tmp_path / "ck_cdc"), buckets=16, op_col="op"
-    )
+    q_ = _start_ingest(sp, stream, idx, op_col="op")
     q_.processAllAvailable()
     q_.stop()
 
@@ -493,7 +506,7 @@ def test_cdc_maintained_text_index_sink(spark, sf_dir, tmp_path):
         )
     )
     ref = str(tmp_path / "tix_cdc_ref")
-    retrieval.build_text_index(final, ref, buckets=16)
+    retrieval.build_text_index(final, ref)
     got = _rows(retrieval.bm25_topk_from_index(spark, idx, TERMS, k=10**6))
     want = _rows(retrieval.bm25_topk_from_index(spark, ref, TERMS, k=10**6))
     assert got == want and got
@@ -517,7 +530,7 @@ def test_cdc_sink_seq_col_latest_wins_and_pure_delete_batch(
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = docs.where(F.col("doc_id") < 40)
+    base = _without_near_dups(docs.where(F.col("doc_id") < 40))
     b1 = base.select("doc_id", "text", F.lit("c").alias("op"), F.lit(1).alias("seq"))
     # b2: doc 2 gets c-then-u (u wins), doc 3 gets d-then-c (c wins)
     b2 = spark.createDataFrame(
@@ -543,9 +556,7 @@ def test_cdc_sink_seq_col_latest_wins_and_pure_delete_batch(
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q_ = sp.start_text_index_sink(
-        stream, idx, str(tmp_path / "ck_seq"), buckets=16, op_col="op", seq_col="seq"
-    )
+    q_ = _start_ingest(sp, stream, idx, op_col="op", seq_col="seq")
     q_.processAllAvailable()
     q_.stop()
 
@@ -562,7 +573,7 @@ def test_cdc_sink_seq_col_latest_wins_and_pure_delete_batch(
         )
     )
     ref = str(tmp_path / "tix_seq_ref")
-    retrieval.build_text_index(final, ref, buckets=16)
+    retrieval.build_text_index(final, ref)
     got = _rows(retrieval.bm25_topk_from_index(spark, idx, TERMS, k=10**6))
     want = _rows(retrieval.bm25_topk_from_index(spark, ref, TERMS, k=10**6))
     assert got == want and got
@@ -574,9 +585,7 @@ def test_cdc_sink_seq_col_latest_wins_and_pure_delete_batch(
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q2 = sp.start_text_index_sink(
-        stream2, idx2, str(tmp_path / "ck_noseq"), buckets=16, op_col="op"
-    )
+    q2 = _start_ingest(sp, stream2, idx2, op_col="op")
     with pytest.raises(Exception, match="seq_col"):
         q2.processAllAvailable()
     q2.stop()
@@ -1017,10 +1026,7 @@ def test_cdc_sink_rejects_tied_sequences(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(feed + "/*.parquet")
     )
-    q = sp.start_text_index_sink(
-        stream, str(tmp_path / "tix_tie"), str(tmp_path / "ck_tie"),
-        buckets=8, op_col="op", seq_col="seq",
-    )
+    q = _start_ingest(sp, stream, str(tmp_path / "tix_tie"), op_col="op", seq_col="seq")
     with pytest.raises(Exception, match="TIED"):
         q.processAllAvailable()
     q.stop()

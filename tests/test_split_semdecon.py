@@ -281,9 +281,9 @@ def test_streamed_semantic_gate_kills_permuted_copies(spark, sf_dir, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{feed}/*.parquet")
     )
-    q = sp.start_corpus_ingest_sink(
-        stream, corpus, idx, str(tmp_path / "ck"),
-        benchmark_vectors_dir=vdir, semantic_threshold=0.95,
+    q = sp.start_document_ingest_sink(
+        stream, corpus, idx, str(tmp_path / "tix"), str(tmp_path / "ivf"),
+        str(tmp_path / "ck"), benchmark_vectors_dir=vdir, semantic_threshold=0.95,
     )
     q.processAllAvailable()
     arriving_leaks.unionByName(fresh).coalesce(1).write.mode("overwrite").parquet(

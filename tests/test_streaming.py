@@ -732,3 +732,31 @@ def test_foreach_batch_sink_guard_apply_marker_maintenance_order(spark, tmp_path
     assert [p["batchId"] for p in q.recentProgress if p["numInputRows"] == 0][:1] == [0]
     assert applied == [0, 1]
     assert not os.path.exists(os.path.join(empty_meta, "_LAST_EPOCH"))
+
+
+def test_takedown_refuses_layout_without_checkpoint(spark, tmp_path):
+    """A ``_SINK_LAYOUT.json`` that records no checkpoint names no
+    writer whose liveness a takedown could check: ``delete_documents``
+    and ``delete_assets`` refuse with the restart cure before they
+    touch the corpus."""
+    import json
+
+    corpus, meta = tmp_path / "corpus", tmp_path / "corpus_meta"
+    group = str(corpus / "batch_group=0")
+    for key, takedown, dirs in (
+        ("doc_id", sp.delete_documents, ("minhash", "text", "embedding")),
+        ("asset_id", sp.delete_assets, ("phash", "embedding")),
+    ):
+        spark.createDataFrame([(1, "a"), (2, "b")], f"{key} long, text string").write.mode(
+            "overwrite"
+        ).parquet(group)
+        before = sorted(os.listdir(group))
+        meta.mkdir(exist_ok=True)
+        layout = {"corpus_dir": str(corpus), "key": key}
+        layout.update({f"{d}_index_dir": str(tmp_path / d) for d in dirs})
+        (meta / "_SINK_LAYOUT.json").write_text(json.dumps(layout))
+        with pytest.raises(RuntimeError, match="restart the ingest sink once"):
+            takedown(spark, str(meta), [1])
+        assert sorted(os.listdir(group)) == before
+        assert sorted(r[key] for r in spark.read.parquet(group).collect()) == [1, 2]
+        assert os.listdir(meta) == ["_SINK_LAYOUT.json"]
